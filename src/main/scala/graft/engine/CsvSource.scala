@@ -1,5 +1,10 @@
 package graft.engine
 
+import java.io.{BufferedReader, InputStream, InputStreamReader}
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -97,16 +102,37 @@ object CsvSource {
     else readHeaderless(spark, path)
   }
 
-  // Header sniffing: one line off the top of the file. Goes through the
-  // Hadoop filesystem API (spark.read.text), not local java.io, so it works
-  // against object storage (s3a/gcs/hdfs) the same as a local path; the
-  // limit(1) stops the scan after the first record batch.
+  // Header sniffing: the first non-empty line, read on the driver through
+  // the Hadoop FS API (not local java.io), so it works against object storage
+  // (s3a/gcs/hdfs) the same as a local path and launches no Spark job. Like
+  // Spark's text source: globs expand, a directory contributes its visible
+  // files (`_`/`.` prefixes skipped) in name order, compressed files are
+  // decoded by their extension's codec, lines end at LF, CR or CRLF, text is
+  // UTF-8 and a leading byte-order mark is dropped. Reading stops at the
+  // first non-empty line. A path that matches nothing sniffs as "" and the
+  // scan that follows raises Spark's path-not-found error.
   private def firstLine(spark: SparkSession, path: String): String = {
-    import org.apache.spark.sql.functions.{length => strlen, col}
-    spark.read.text(path)
-      .filter(strlen(col("value")) > 0)
-      .limit(1)
-      .collect()
-      .headOption.map(_.getString(0)).getOrElse("")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val pattern = new Path(path)
+    val fs = pattern.getFileSystem(conf)
+    val codecs = new CompressionCodecFactory(conf)
+    def firstIn(file: Path): Option[String] = {
+      val raw = fs.open(file)
+      val in = Option(codecs.getCodec(file)).fold[InputStream](raw)(_.createInputStream(raw))
+      val reader = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+      try {
+        val first = Option(reader.readLine()).map(_.stripPrefix("\uFEFF"))
+        (first.iterator ++ Iterator.continually(reader.readLine()).takeWhile(_ != null)).find(_.nonEmpty)
+      } finally reader.close()
+    }
+    Option(fs.globStatus(pattern)).toSeq.flatten
+      .flatMap { st =>
+        if (!st.isDirectory) Seq(st)
+        else fs.listStatus(st.getPath).toSeq
+          .filter(f => f.isFile && Catalog.visible(f.getPath.getName))
+          .sortBy(_.getPath.getName)
+      }
+      .iterator.map(st => firstIn(st.getPath)).collectFirst { case Some(line) => line }
+      .getOrElse("")
   }
 }

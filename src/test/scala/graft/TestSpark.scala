@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared local session for every suite (Test / fork := true runs all
@@ -19,4 +23,34 @@ object TestSpark {
 
   def collectSorted(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
+
+  /** Runs `f` on this thread and counts the Spark jobs it launches. Jobs are
+    * told apart by a fresh job group; a marker job run afterwards in the same
+    * group proves every earlier job start has reached the listener. */
+  def jobsLaunchedBy[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val jobs = new AtomicInteger
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "marker") marker.countDown()
+          else jobs.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      val out =
+        try f
+        finally {
+          sc.setJobDescription("marker")
+          spark.range(1).count()
+          sc.clearJobGroup()
+        }
+      assert(marker.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -1,9 +1,12 @@
 package graft.engine
 
 import java.nio.file.Files
+import java.util.zip.GZIPOutputStream
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.TestSpark.jobsLaunchedBy
 
 /** Flat-file source semantics (SURVEY.md §2.1 S2-S5, §2.8 F5): schemas from
   * header / preset / positional names, every column String, never inferred
@@ -88,5 +91,70 @@ class CsvSourceSpec extends AnyFunSuite {
     val df = CsvSource.readWithHeader(spark, p, delimiter = "\t")
     assert(df.columns.toSeq == Seq("a", "b"))
     assert(df.collect()(0).getString(1) == "2")
+  }
+
+  private def tmpBytes(name: String, bytes: Array[Byte]): String = {
+    val f = new java.io.File(Files.createTempDirectory("graft_csv").toFile, name)
+    Files.write(f.toPath, bytes)
+    f.getAbsolutePath
+  }
+
+  test("header sniff skips leading blank lines") {
+    val p = tmpCsv("lead.csv", "", "", "a,b", "1,2", "3,4")
+    val df = CsvSource.readWithHeader(spark, p)
+    assert(df.columns.toSeq == Seq("a", "b"))
+    assert(df.count() == 2)
+    assert(CsvSource.readHeaderless(spark, p).columns.toSeq == Seq("column_1", "column_2"))
+  }
+
+  test("header sniff handles CRLF line endings and a UTF-8 byte-order mark") {
+    val crlf = tmpBytes("crlf.csv", "id,name\r\n1,x\r\n2,y\r\n".getBytes("UTF-8"))
+    val df = CsvSource.readWithHeader(spark, crlf)
+    assert(df.columns.toSeq == Seq("id", "name")) // no trailing \r on the last name
+    assert(df.orderBy("id").collect().map(_.getString(1)).toSeq == Seq("x", "y"))
+    val bom = tmpBytes("bom.csv", "\uFEFFid,name\n1,x\n".getBytes("UTF-8"))
+    assert(CsvSource.readWithHeader(spark, bom).columns.toSeq == Seq("id", "name"))
+  }
+
+  test("header sniff decompresses a .csv.gz file") {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val gz = new GZIPOutputStream(bytes)
+    gz.write("k,v\n1,one\n2,two\n3,three\n".getBytes("UTF-8"))
+    gz.close()
+    val p = tmpBytes("data.csv.gz", bytes.toByteArray)
+    val df = CsvSource.read(spark, p)
+    assert(df.columns.toSeq == Seq("k", "v"))
+    assert(df.orderBy("k").collect().map(_.getString(1)).toSeq == Seq("one", "two", "three"))
+  }
+
+  test("an empty file sniffs an empty header and reads no rows") {
+    val p = tmpBytes("empty.csv", Array.emptyByteArray)
+    val headerless = CsvSource.readHeaderless(spark, p)
+    assert(headerless.columns.toSeq == Seq("column_1"))
+    assert(headerless.count() == 0)
+    assert(CsvSource.readWithHeader(spark, p).count() == 0)
+  }
+
+  test("header sniff reads a multi-part Sinks.exportCsv directory") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_csv_parts").toString + "/export"
+    Sinks.exportCsv((1 to 40).map(i => (i.toLong, s"n$i")).toDF("id", "name").repartition(4),
+      out, singleFile = false)
+    assert(new java.io.File(out).list().count(_.startsWith("part-")) > 1)
+    val df = CsvSource.readWithHeader(spark, out)
+    assert(df.columns.toSeq == Seq("id", "name"))
+    assert(df.count() == 40) // every part file's header dropped, no data lost
+  }
+
+  test("CsvSource.read launches no Spark job; a missing path still fails in Spark") {
+    val hdr = tmpCsv("plain.csv", "c1,c2", "a,b")
+    val raw = tmpCsv("raw.txt", "a,b,c")
+    val row = Seq.fill(16)("v").mkString(",")
+    val pp = tmpCsv("pp-jobs.csv", row)
+    for ((path, hasHeader) <- Seq(hdr -> true, raw -> false, pp -> true)) {
+      val (_, jobs) = jobsLaunchedBy(CsvSource.read(spark, path, hasHeader))
+      assert(jobs == 0, path)
+    }
+    intercept[AnalysisException](CsvSource.read(spark, hdr + ".absent"))
   }
 }
