@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding merge learning (Sennrich et al. 2016, "Neural Machine
@@ -53,8 +53,8 @@ object Bpe {
   /** Learn up to `n` merges from `v0` (a `vocab(...)` frame). Returns the
     * merge table in rank order plus the final segmented vocabulary
     * (word, f, syms) with all merges applied. The vocab frame is
-    * localCheckpoint'ed; callers holding it across `cacheMax` corpus
-    * switches must copy it (the dup-graph memo contract). */
+    * localCheckpoint'ed; through [[trained]] it follows the
+    * [[SessionMemo]] validity contract. */
   def learnMerges(v0: DataFrame, n: Int): (Seq[Merge], DataFrame) = {
     var v = v0.select(col("word"), col("f"), col("syms")).localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
@@ -90,33 +90,13 @@ object Bpe {
   // ------------------------------------------------------------ memo
   // Two declared queries (the merge table and the segmentation fertility
   // audit) train the same tokenizer; pay the iteration loop once per
-  // (session, corpus plan, n). Same shape as the dup-graph memo: keyed on
-  // the canonicalized input plan, LRU-bounded, evicted vocab checkpoints
-  // released eagerly.
-  private type Key = (SparkSession,
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int)
-  private val cacheMax = 4
-  private val cache: java.util.Map[Key, (Seq[Merge], DataFrame)] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[Key, (Seq[Merge], DataFrame)](8, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[Key, (Seq[Merge], DataFrame)]): Boolean = {
-          val evict = size() > cacheMax
-          if (evict) graft.tools.CacheHygiene.releaseLocalCheckpoint(e.getValue._2)
-          evict
-        }
-      })
+  // (session, corpus plan, n).
+  private val memo = new SessionMemo[(Seq[Merge], DataFrame)](
+    t => graft.tools.CacheHygiene.releaseLocalCheckpoint(t._2))
 
   /** Memoized trainer keyed by (session, canonicalized vocab-input plan, n). */
   def trained(docs: DataFrame, textCol: String, n: Int): (Seq[Merge], DataFrame) = {
     val v0 = vocab(docs, textCol)
-    val key: Key = (v0.sparkSession, v0.queryExecution.analyzed.canonicalized, n)
-    cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    // Build outside the lock (ivfFitted rationale): a benign double-build
-    // beats serializing unrelated corpora behind a multi-job loop.
-    Option(cache.get(key)).getOrElse {
-      val built = learnMerges(v0, n)
-      Option(cache.putIfAbsent(key, built)).getOrElse(built)
-    }
+    memo.getOrBuild(v0, n)(learnMerges(v0, n))
   }
 }

@@ -588,50 +588,13 @@ object Dedup {
 
   /** Session memo for the rare-gram dup graph. Seven declared queries
     * (clusters, drop, keep-best, leakage-safe split, degree profile,
-    * PageRank, BFS layers) analyze the SAME graph; building its narrow
-    * (src, dst) edge frame — and the connected components over it — once
-    * per (session, corpus) is the same pay-once economics as the
-    * bucketed-join tables and the IVF index memo. Keyed on the session and
-    * the CANONICALIZED docs plan (equality-checked, so two corpora can
-    * never collide); entries of stopped sessions purge on access; LRU-
-    * bounded. Frames are localCheckpointed eagerly, so every consumer
-    * starts from materialized longs with no lineage back to the corpus. */
-  private type GraphKey = (org.apache.spark.sql.SparkSession,
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, String)
-  private val graphCacheMax = 8
-  private val graphCache: java.util.Map[GraphKey, DataFrame] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[GraphKey, DataFrame](16, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[GraphKey, DataFrame]): Boolean = {
-          val evict = size() > graphCacheMax
-          // Evicted graphs are localCheckpoint'ed: release their block-
-          // manager storage NOW (the ivfCache eviction contract) instead of
-          // waiting for driver GC + ContextCleaner to notice the frame.
-          // CONTRACT for callers: a released localCheckpoint is
-          // IRRECOVERABLE (lineage was truncated — unlike an unpersisted
-          // persist(), nothing can recompute it), so a returned graph frame
-          // is only valid until `graphCacheMax` later distinct corpora
-          // evict it. A caller holding a frame across that many corpus
-          // switches must persist its own copy (or re-call — the memo
-          // rebuilds). The alternative — leaving eviction to GC — retains
-          // up to several stale edge frames of block storage in a
-          // long-lived session, the round-5 ADVICE leak this fixes; the
-          // bounded-validity contract is the cheaper side of that trade.
-          if (evict) graft.tools.CacheHygiene.releaseLocalCheckpoint(e.getValue)
-          evict
-        }
-      })
-
-  private def memoGraph(key: GraphKey)(build: => DataFrame): DataFrame = {
-    graphCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    // Build OUTSIDE the map lock (the ivfFitted rationale): a benign
-    // double-build race beats serializing unrelated corpora behind one
-    // k-sized job. The losing frame is just unreferenced afterwards.
-    Option(graphCache.get(key)).getOrElse {
-      val built = build
-      Option(graphCache.putIfAbsent(key, built)).getOrElse(built)
-    }
-  }
+    * PageRank, BFS layers) analyze the SAME graph; its narrow (src, dst)
+    * edge frame and the connected components over it are built once per
+    * (session, corpus). Frames are localCheckpointed eagerly, so every
+    * consumer starts from materialized longs with no lineage back to the
+    * corpus. */
+  private val graphs =
+    new SessionMemo[DataFrame](graft.tools.CacheHygiene.releaseLocalCheckpoint)
 
   /** The un-memoized edge build — public so plan gates can pin its scan
     * properties (filter pushdown, pruned read) which the memoized path
@@ -681,11 +644,8 @@ object Dedup {
   def dupGraphEdges(docs: DataFrame, idCol: String = "doc_id",
                     textCol: String = "text", n: Int = 3,
                     refit: Boolean = false): DataFrame = {
-    val key: GraphKey = (docs.sparkSession,
-      docs.queryExecution.analyzed.canonicalized, n, s"edges:$idCol:$textCol")
-    if (refit) Option(graphCache.remove(key))
-      .foreach(graft.tools.CacheHygiene.releaseLocalCheckpoint)
-    memoGraph(key) {
+    if (refit) graphs.invalidate(docs, "edges", idCol, textCol, n)
+    graphs.getOrBuild(docs, "edges", idCol, textCol, n) {
       dupGraphEdgesFresh(docs, idCol, textCol, n).localCheckpoint(eager = true)
     }
   }
@@ -696,11 +656,8 @@ object Dedup {
   def dupGraphComponents(docs: DataFrame, idCol: String = "doc_id",
                          textCol: String = "text", n: Int = 3,
                          refit: Boolean = false): DataFrame = {
-    val key: GraphKey = (docs.sparkSession,
-      docs.queryExecution.analyzed.canonicalized, n, s"comps:$idCol:$textCol")
-    if (refit) Option(graphCache.remove(key))
-      .foreach(graft.tools.CacheHygiene.releaseLocalCheckpoint)
-    memoGraph(key) {
+    if (refit) graphs.invalidate(docs, "comps", idCol, textCol, n)
+    graphs.getOrBuild(docs, "comps", idCol, textCol, n) {
       connectedComponents(dupGraphEdges(docs, idCol, textCol, n, refit),
         "src", "dst").localCheckpoint(eager = true)
     }
@@ -708,8 +665,5 @@ object Dedup {
 
   /** Test/ops hook: number of live dup-graph memo entries (stopped-session
     * keys purged first). */
-  def graphCacheSize: Int = {
-    graphCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    graphCache.size()
-  }
+  def graphCacheSize: Int = graphs.size
 }

@@ -195,26 +195,13 @@ object Pq {
       .orderBy(col("dist2"), col("id")).limit(k)
   }
 
-  // Build-once memo for the (training, encoding) pair, keyed on the session
-  // and the CANONICALIZED input plan + params (the ivfFitted discipline —
-  // equality-checked, so two corpora can never collide into one model).
-  private type FitKey = (org.apache.spark.sql.SparkSession,
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Int, Int, Int, Int)
-  private val fitCache: java.util.Map[FitKey, Codebooks] =
-    java.util.Collections.synchronizedMap(new java.util.HashMap[FitKey, Codebooks]())
+  // The codebooks are m·k·dsub driver-side doubles: nothing to release.
+  private[llm] val fits = new SessionMemo[Codebooks](_ => ())
 
-  /** Memoized [[train]] — the codebooks are m·k·dsub driver-side doubles,
-    * cheap to hold; concurrent misses race benignly (last write wins, both
-    * values identical by the determinism contract). */
+  /** Memoized [[train]], keyed by (session, canonicalized input plan,
+    * params). */
   def trained(df: DataFrame, idCol: String, vecCol: String, dim: Int,
-              m: Int, k: Int, iters: Int): Codebooks = {
-    fitCache.keySet.removeIf(k0 => k0._1.sparkContext.isStopped)
-    val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized,
-      vecCol, dim, m, k, iters)
-    Option(fitCache.get(key)).getOrElse {
-      val cb = train(df, idCol, vecCol, dim, m, k, iters)
-      fitCache.put(key, cb)
-      cb
-    }
-  }
+              m: Int, k: Int, iters: Int): Codebooks =
+    fits.getOrBuild(df, vecCol, dim, m, k, iters)(
+      train(df, idCol, vecCol, dim, m, k, iters))
 }

@@ -1,0 +1,64 @@
+package graft.llm
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
+/** Session memo for build-once fits (IVF index, dup graph, BPE, Unigram,
+  * PQ): a long-lived session fits an index or model once and probes it many
+  * times, so refitting per call would be rebuilding a B-tree per lookup.
+  *
+  * Keyed on (session, CANONICALIZED input plan, params) — equality-checked,
+  * not hashed, so two different corpora can never collide into one entry.
+  * Entries of stopped sessions are purged on access without `release`
+  * (their storage died with the executors). An access-ordered LRU holds at
+  * most [[SessionMemo.MaxEntries]] entries; `release` frees the storage of
+  * every value the memo drops: the LRU victim, an [[invalidate]]d entry and
+  * the loser of a build race. A released localCheckpoint is irrecoverable
+  * (its lineage was truncated), so a returned checkpointed frame is valid
+  * until `MaxEntries` later corpora evict it; a caller holding one longer
+  * persists its own copy or calls again.
+  *
+  * Builds run OUTSIDE the map lock, so a long fit never serializes callers
+  * that want a different key. Two threads missing on the same key both
+  * build; `putIfAbsent` keeps the winner and the loser is released. */
+private[graft] final class SessionMemo[V](release: V => Unit) {
+  private type Key = (SparkSession, LogicalPlan, Seq[Any])
+
+  private val entries: java.util.Map[Key, V] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[Key, V](16, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[Key, V]): Boolean = {
+          val evict = this.size() > SessionMemo.MaxEntries
+          if (evict) release(e.getValue)
+          evict
+        }
+      })
+
+  private def key(df: DataFrame, params: Seq[Any]): Key =
+    (df.sparkSession, df.queryExecution.analyzed.canonicalized, params)
+
+  private def purgeStopped(): Unit =
+    entries.keySet.removeIf(k => k._1.sparkContext.isStopped)
+
+  def getOrBuild(df: DataFrame, params: Any*)(build: => V): V = {
+    purgeStopped()
+    val k = key(df, params)
+    Option(entries.get(k)).getOrElse {
+      val built = build
+      Option(entries.putIfAbsent(k, built)) match {
+        case Some(winner) => release(built); winner
+        case None => built
+      }
+    }
+  }
+
+  /** The `refit` hook: drop the entry and release it. */
+  def invalidate(df: DataFrame, params: Any*): Unit =
+    Option(entries.remove(key(df, params))).foreach(release)
+
+  def size: Int = { purgeStopped(); entries.size() }
+}
+
+private[graft] object SessionMemo {
+  private[llm] val MaxEntries = 8
+}

@@ -308,32 +308,24 @@ object Similarity {
       idCol, vecCol, query, k)
   }
 
-  /** Session-scoped fitted-index memo for [[ivfTopK]]: an ANN index is
-    * built once and probed many times — refitting the quantizer per query
-    * would be the moral equivalent of rebuilding a B-tree per lookup. Keyed
-    * by (session, input plan identity, params); the assigned table is kept
-    * MEMORY_AND_DISK so repeat probes skip the scan+assign too. This is the
-    * in-memory analog of writeIvfIndex → ivfTopKFromIndex (the durable path
-    * a 100 TB corpus uses instead).
-    *
-    * BOUNDED: access-ordered LRU capped at [[ivfCacheMax]] — each entry pins
-    * a MEMORY_AND_DISK frame, so an unbounded memo would let a long-lived
-    * session accrete stale indices until executors spill everything else.
-    * The evicted entry's frame is unpersisted; a later identical request
-    * simply refits. */
-  private type IvfKey = (org.apache.spark.sql.SparkSession,
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Int, Long, String)
-  private type IvfVal = (DataFrame, Array[Array[Double]])
-  private val ivfCacheMax = 8
-  private val ivfCache: java.util.Map[IvfKey, IvfVal] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[IvfKey, IvfVal](16, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[IvfKey, IvfVal]): Boolean = {
-          val evict = size() > ivfCacheMax
-          if (evict) e.getValue._1.unpersist(blocking = false)
-          evict
-        }
-      })
+  private val ivfMemo =
+    new SessionMemo[(DataFrame, Array[Array[Double]])](_._1.unpersist(blocking = false))
+
+  /** The memoized IVF fit behind [[ivfTopK]] — public so batched callers
+    * (a multi-query evaluation panel) share the same cached index instead
+    * of refitting per call. The assigned table is kept MEMORY_AND_DISK so
+    * repeat probes skip the scan+assign too; an evicted or refit entry is
+    * unpersisted. This is the in-memory analog of writeIvfIndex →
+    * ivfTopKFromIndex (the durable path a 100 TB corpus uses instead). */
+  def ivfFitted(df: DataFrame, vecCol: String, nLists: Int,
+                seed: Long = 42L, refit: Boolean = false,
+                idCol: String = "vec_id"): (DataFrame, Array[Array[Double]]) = {
+    if (refit) ivfMemo.invalidate(df, vecCol, nLists, seed, idCol)
+    ivfMemo.getOrBuild(df, vecCol, nLists, seed, idCol) {
+      val (ix, cs) = ivfIndex(df, vecCol, nLists, seed, idCol)
+      (ix.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), cs)
+    }
+  }
 
   /** ANN top-k via IVF: probe the `nProbe` lists whose centroids are nearest
     * the query (driver-side math over nLists centroids), brute-force cosine
@@ -342,38 +334,6 @@ object Similarity {
     * brute force. The fitted index is memoized per (session, input, params);
     * pass `refit = true` to force a rebuild (e.g. after the corpus changed
     * behind an identical plan). */
-  /** The memoized IVF fit behind [[ivfTopK]] — public so batched callers
-    * (a multi-query evaluation panel) share the same cached index instead
-    * of refitting per call.
-    *
-    * Keyed on the session object and the CANONICALIZED plan — equality-
-    * checked, not hashed, so two different corpora can never collide into
-    * one index. Entries of stopped sessions are purged on access (their
-    * persisted frames are unusable anyway). */
-  def ivfFitted(df: DataFrame, vecCol: String, nLists: Int,
-                seed: Long = 42L, refit: Boolean = false,
-                idCol: String = "vec_id"): (DataFrame, Array[Array[Double]]) = {
-    ivfCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized,
-      vecCol, nLists, seed, idCol)
-    if (refit) Option(ivfCache.remove(key)).foreach(_._1.unpersist(blocking = false))
-    // Fit OUTSIDE the map lock: computeIfAbsent on a synchronizedMap would
-    // hold the single lock for the whole k-means job, serializing concurrent
-    // ivfTopK calls that want DIFFERENT indices. The trade is a benign race:
-    // two threads missing on the same key both fit; putIfAbsent keeps the
-    // winner and the loser unpersists its duplicate frame.
-    Option(ivfCache.get(key)).getOrElse {
-      if (sys.env.contains("GRAFT_DEBUG_MEMO"))
-        System.err.println(s"[ivf] MISS nLists=$nLists seed=$seed cache=${ivfCache.size()}")
-      val (ix, cs) = ivfIndex(df, vecCol, nLists, seed, idCol)
-      val fitted = (ix.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), cs)
-      Option(ivfCache.putIfAbsent(key, fitted)) match {
-        case Some(winner) => fitted._1.unpersist(blocking = false); winner
-        case None => fitted
-      }
-    }
-  }
-
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
               query: Seq[Double], k: Int, nLists: Int = 16, nProbe: Int = 4,
               seed: Long = 42L, refit: Boolean = false): DataFrame = {

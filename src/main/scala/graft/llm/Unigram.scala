@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.UnigramViterbi
@@ -117,30 +117,15 @@ object Unigram {
   // ------------------------------------------------------------ memo
   // Two declared queries (the model table and the segmentation audit)
   // train the same tokenizer; pay the EM loop once per (session,
-  // canonicalized vocab plan, params) — the Bpe.trained shape.
-  private type Key = (SparkSession,
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int, Int)
-  private val cacheMax = 4
-  private val cache: java.util.Map[Key, Seq[Piece]] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[Key, Seq[Piece]](8, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[Key, Seq[Piece]]): Boolean =
-          size() > cacheMax
-      })
+  // canonicalized vocab plan, params).
+  private val memo = new SessionMemo[Seq[Piece]](_ => ())
 
   /** Memoized trainer over a documents frame. */
   def trained(docs: DataFrame, textCol: String, iters: Int = DefaultIters,
               maxLen: Int = DefaultMaxLen,
               vocabSize: Int = DefaultVocabSize): Seq[Piece] = {
     val v = wordFreq(docs, textCol)
-    val key: Key = (v.sparkSession, v.queryExecution.analyzed.canonicalized,
-      iters, maxLen, vocabSize)
-    cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    Option(cache.get(key)).getOrElse {
-      val built = train(v, iters, maxLen, vocabSize)
-      Option(cache.putIfAbsent(key, built)).getOrElse(built)
-    }
+    memo.getOrBuild(v, iters, maxLen, vocabSize)(train(v, iters, maxLen, vocabSize))
   }
 
   /** The trained kernel as a column function (for the segmentation query). */
