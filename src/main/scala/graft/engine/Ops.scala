@@ -1,7 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The reference's relational surface as pure `DataFrame => DataFrame`
   * operators (SURVEY.md §2). Everything here is declarative — Catalyst picks
@@ -20,7 +21,16 @@ object Ops {
     * The reference pages with `LIMIT … OFFSET …` and **no ORDER BY**
     * (nondeterministic, rows can repeat/vanish across pages). We require an
     * explicit total order so `concat(all pages) == ordered table`.
-    * `MAX_PAGE_SIZE` clamp mirrors server.js:54.
+    * `MAX_PAGE_SIZE` clamp mirrors server.js:54; page numbers below 1 read
+    * page 1.
+    *
+    * On a plain Parquet scan ordered by one key whose row groups hold
+    * disjoint key ranges (a [[Catalog.table]] written in key order, such as
+    * by [[Sinks.writeSorted]]), [[ParquetFooters.page]] locates the row
+    * groups holding the page from the footers, and the page reads only
+    * those. Every other frame, key or layout sorts the whole frame, and
+    * there an offset past `Int.MaxValue` rows is rejected with an
+    * `IllegalArgumentException`. Both paths give the same rows.
     */
   val DefaultPageSize = 100 // server.js:53
   val MaxPageSize     = 1000 // server.js:54
@@ -28,14 +38,29 @@ object Ops {
   def page(df: DataFrame, orderBy: Seq[Column], pageNum: Int,
            pageSize: Int = DefaultPageSize): DataFrame = {
     val size   = math.min(pageSize, MaxPageSize)
-    val offset = (math.max(pageNum, 1) - 1) * size
-    df.orderBy(orderBy: _*).offset(offset).limit(size)
+    val offset = (math.max(pageNum, 1) - 1).toLong * size
+    ParquetFooters.page(df, orderBy, offset, size).getOrElse {
+      require(offset <= Int.MaxValue,
+        s"page $pageNum of size $size starts at row $offset, past the ${Int.MaxValue} rows an offset can skip")
+      df.orderBy(orderBy: _*).offset(offset.toInt).limit(size)
+    }
   }
 
-  /** Total-row count (A1/A2, server.js:455-461, 500-507) as a one-row frame.
-    * Single distributed job — not the reference's second full scan. */
+  /** Total-row count (A1/A2, server.js:455-461, 500-507) as a one-row frame
+    * with one non-null `total: bigint` column.
+    *
+    * On a plain Parquet scan ([[ParquetFooters]]) the total is the sum of
+    * the footers' row-group row counts, read when this is called, and the
+    * frame is local: collecting it runs no Spark job. Every other frame
+    * (filtered, joined, CSV, partitioned) counts in one Spark job when
+    * collected. */
   def countTotal(df: DataFrame): DataFrame =
-    df.agg(count(lit(1)).as("total"))
+    ParquetFooters.rowCount(df) match {
+      case Some(n) =>
+        df.sparkSession.createDataFrame(java.util.List.of(Row(n)),
+          StructType(Seq(StructField("total", LongType, nullable = false))))
+      case None => df.agg(count(lit(1)).as("total"))
+    }
 
   /** Chained multi-table INNER JOIN (J1, server.js:817-866): left-fold
     * `FROM t0 JOIN t1 ON c1 JOIN t2 ON c2 …`. Conditions are expressions, so

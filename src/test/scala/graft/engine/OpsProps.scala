@@ -25,6 +25,29 @@ object OpsProps extends Properties("graft.engine") {
       seen == (1L to n.toLong)
     }
 
+  property("countTotal == count() and pages == the plain page over any Parquet layout") =
+    Prop.forAll(Gen.chooseNum(0, 150), Gen.chooseNum(1, 5), Gen.oneOf(256, 2048, 1 << 20),
+      Gen.oneOf(true, false), Gen.oneOf(true, false), Gen.oneOf(true, false), Gen.chooseNum(20, 60)) {
+      (n: Int, files: Int, blockBytes: Int, sorted: Boolean, nulls: Boolean, desc: Boolean, size: Int) =>
+        // Null-key rows are equal, so the order of their tie cannot change a page.
+        val rows = (0 until n).map(i =>
+          if (nulls && i % 17 == 5) (None, "null") else (Some(i.toLong), s"v$i")).toDF("k", "v")
+        val laid = if (sorted) rows.repartitionByRange(files, col("k")).sortWithinPartitions("k")
+          else rows.repartition(files)
+        val path = java.nio.file.Files.createTempDirectory("graft_prop_footers").toString + "/t.parquet"
+        laid.write.option("parquet.block.size", blockBytes)
+          .option("parquet.block.size.row.check.min", 5)
+          .option("parquet.block.size.row.check.max", 5).parquet(path)
+        val df = spark.read.parquet(path)
+        val order = Seq(if (desc) col("k").desc else col("k"))
+        val pagesEqual = (1 to n / size + 1).forall { p =>
+          Ops.page(df, order, p, size).collect().toSeq ==
+            df.orderBy(order: _*).offset((p - 1) * size).limit(size).collect().toSeq
+        }
+        Ops.countTotal(df).head().getLong(0) == df.count() && pagesEqual &&
+          (!sorted || nulls || ParquetFooters.page(df, order, 0, size).isDefined)
+    }
+
   property("dedupKeepFirst: output keys unique, idempotent, subset of input") =
     Prop.forAll(Gen.listOfN(40, Gen.chooseNum(0, 9)), Gen.chooseNum(0L, 100L)) {
       (keys: List[Int], salt: Long) =>

@@ -33,6 +33,20 @@ class OpsSpec extends AnyFunSuite {
     assert(p0.toSeq == (1L to 10L)) // page 0 treated as page 1
   }
 
+  test("page offsets past Int.MaxValue: rejected when scanning, empty from footers") {
+    // (3,000,000 - 1) * 1000 and (4,294,969 - 1) * 1000 overflow an Int: the
+    // first to a negative offset, the second to 704.
+    for (p <- Seq(3000000, 4294969)) {
+      val e = intercept[IllegalArgumentException](Ops.page(nums, Seq(col("id")), p, 1000))
+      assert(e.getMessage.contains(s"${(p - 1).toLong * 1000}"), e.getMessage)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_ops_deep").toString
+    nums.write.parquet(s"$dir/nums.parquet")
+    val table = new Catalog(spark, dir).table("nums")
+    for (p <- Seq(3000000, 4294969))
+      assert(Ops.page(table, Seq(col("id")), p, 1000).isEmpty, s"page $p")
+  }
+
   test("countTotal returns one row named total") {
     val r = Ops.countTotal(nums).collect()
     assert(r.length == 1 && r(0).getLong(0) == 57)

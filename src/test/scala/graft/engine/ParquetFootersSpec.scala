@@ -1,0 +1,140 @@
+package graft.engine
+
+import java.nio.file.Files
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.TestSpark
+import graft.TestSpark.jobsLaunchedBy
+
+/** Table previews answered from Parquet footers ([[ParquetFooters]] behind
+  * [[Ops.countTotal]] and [[Ops.page]]): every answer equals the full-scan
+  * answer, the count runs no Spark job, and every frame or layout the
+  * footers cannot answer falls back. */
+class ParquetFootersSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  /** A fresh catalog's table path; [[read]] reads it back. */
+  private def newTable(): String = Files.createTempDirectory("graft_footers").toString + "/t.parquet"
+  private def read(path: String): DataFrame = new Catalog(spark, new Path(path).getParent.toString).table("t")
+  private def table(df: DataFrame): DataFrame = { val p = newTable(); df.write.parquet(p); read(p) }
+
+  /** Row groups in the Parquet files under `dir`. */
+  private def rowGroups(dir: String): Int = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    root.getFileSystem(conf).listStatus(root).filter(_.getPath.getName.endsWith(".parquet")).map { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try reader.getFooter.getBlocks.size finally reader.close()
+    }.sum
+  }
+
+  /** `countTotal` and every page of `df` (and the one past the end) equal
+    * the full-scan answers; `footers` says whether the footer path must
+    * have answered the pages. */
+  private def assertSameAsScan(df: DataFrame, order: Seq[Column], size: Int, footers: Boolean): Unit = {
+    val n = df.count()
+    assert(Ops.countTotal(df).collect().toSeq == Seq(Row(n)))
+    for (p <- 1 to (n / size + 1).toInt) {
+      val offset = (p - 1) * size
+      assert(ParquetFooters.page(df, order, offset, size).isDefined == footers, s"page $p")
+      assert(Ops.page(df, order, p, size).collect().toSeq ==
+        df.orderBy(order: _*).offset(offset).limit(size).collect().toSeq, s"page $p of size $size")
+    }
+  }
+
+  private def keyed(n: Long, parts: Int): DataFrame =
+    spark.range(0, n, 1, parts).select(col("id"), concat(lit("v"), col("id")).as("v"))
+
+  test("multi-file table: count with 0 jobs, every page ascending and descending") {
+    val df = table(keyed(1000, 4))
+    assert(df.inputFiles.length == 4)
+    val (total, jobs) = jobsLaunchedBy(Ops.countTotal(df).collect())
+    assert(total.toSeq == Seq(Row(1000L)) && jobs == 0)
+    assert(Ops.countTotal(df).schema == df.agg(count(lit(1)).as("total")).schema)
+    assertSameAsScan(df, Seq(col("id")), 70, footers = true)
+    assertSameAsScan(df, Seq(col("id").desc), 70, footers = true)
+    assertSameAsScan(df.select("v", "id"), Seq(col("id").desc_nulls_first), 333, footers = true)
+  }
+
+  test("multi-row-group file: integral, date and string keys locate their pages") {
+    val path = newTable()
+    spark.range(0, 600, 1, 1).select(
+        col("id"), col("id").cast("int").as("i"), col("id").cast("short").as("s"),
+        date_add(lit("2020-01-01").cast("date"), col("id").cast("int")).as("d"),
+        lpad(col("id").cast("string"), 5, "0").as("k"))
+      .write.option("parquet.block.size", 2048)
+      .option("parquet.block.size.row.check.min", 10)
+      .option("parquet.block.size.row.check.max", 10).parquet(path)
+    val df = read(path)
+    assert(rowGroups(path) > 1)
+    assert(Ops.countTotal(df).collect().toSeq == Seq(Row(600L)))
+    for (k <- Seq("id", "i", "s", "d", "k"); order <- Seq(col(k), col(k).desc))
+      assertSameAsScan(df, Seq(order), 128, footers = true)
+  }
+
+  test("events.parquet through TsNorm: count with 0 jobs, pages by event_id") {
+    val df = new Catalog(spark, "/root/testdata/sf0.001").events
+    val (total, jobs) = jobsLaunchedBy(Ops.countTotal(df).collect())
+    assert(total.toSeq == Seq(Row(df.count())) && jobs == 0)
+    assertSameAsScan(df, Seq(col("event_id")), 128, footers = true)
+    // ts is the normalized column, not the stored one: the full sort answers.
+    assertSameAsScan(df, Seq(col("ts"), col("event_id")), 400, footers = false)
+  }
+
+  test("empty table: count 0 with 0 jobs, every page empty") {
+    val df = table(keyed(0, 1))
+    val (total, jobs) = jobsLaunchedBy(Ops.countTotal(df).collect())
+    assert(total.toSeq == Seq(Row(0L)) && jobs == 0)
+    assertSameAsScan(df, Seq(col("id")), 10, footers = true)
+  }
+
+  test("a page past the end is empty") {
+    val df = table(keyed(100, 2))
+    for (p <- Seq(2, 3, 1000000))
+      assert(Ops.page(df, Seq(col("id")), p, 100).isEmpty, s"page $p")
+    assert(ParquetFooters.page(df, Seq(col("id").desc), 100, 100).isDefined)
+    assert(Ops.page(df, Seq(col("id").desc), 2, 100).isEmpty)
+  }
+
+  test("fallback: filtered, partitioned and CSV frames, a computed key, too many files") {
+    val rows = keyed(300, 3).withColumn("g", col("id") % 3)
+    val filtered = table(rows).filter(col("g") === 1)
+    val partitioned = newTable()
+    rows.write.partitionBy("g").parquet(partitioned)
+    val csv = Files.createTempDirectory("graft_footers_csv").toString + "/t"
+    Sinks.exportCsv(rows, csv)
+    for (df <- Seq(filtered, read(partitioned), CsvSource.read(spark, csv, hasHeader = true))) {
+      assert(ParquetFooters.rowCount(df).isEmpty)
+      assertSameAsScan(df, Seq(col("id")), 64, footers = false)
+    }
+    // A computed column under a stored column's name is not the stored key.
+    assertSameAsScan(table(rows).withColumn("id", -col("id")), Seq(col("id")), 64, footers = false)
+    val manyFiles = table(keyed(ParquetFooters.MaxFiles + 1, ParquetFooters.MaxFiles + 1))
+    assert(ParquetFooters.rowCount(manyFiles).isEmpty)
+    assert(Ops.countTotal(manyFiles).collect().toSeq == Seq(Row(ParquetFooters.MaxFiles + 1L)))
+  }
+
+  test("fallback: null keys, overlapping ranges, an equal key at a group boundary, pre-1582 dates") {
+    val withNull = table((Seq((None, "null")) ++ (1 to 99).map(i => (Some(i.toLong), s"v$i")))
+      .toDF("id", "v").repartitionByRange(2, col("id")))
+    assert(ParquetFooters.rowCount(withNull).contains(100L))
+    assertSameAsScan(withNull, Seq(col("id")), 30, footers = false)
+    assertSameAsScan(withNull, Seq(col("id").desc), 30, footers = false)
+    assertSameAsScan(table(keyed(400, 1).repartition(4)), Seq(col("id")), 64, footers = false)
+    // Files [0, 10] and [10, 20] share the key 10 (its rows are equal, so
+    // the order of the tie cannot change a page).
+    val touching = newTable()
+    for (keys <- Seq(0 to 10, 10 to 20))
+      keys.map(i => (i.toLong, "x")).toDF("id", "v").coalesce(1).write.mode("append").parquet(touching)
+    assertSameAsScan(read(touching), Seq(col("id")), 5, footers = false)
+    val ancient = table(spark.range(0, 100, 1, 2)
+      .select(date_add(lit("1500-01-01").cast("date"), col("id").cast("int")).as("d")))
+    assertSameAsScan(ancient, Seq(col("d")), 30, footers = false)
+  }
+}

@@ -1272,4 +1272,18 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(plain.contains("SortMergeJoin"), s"plain leg not SMJ:\n$plain")
     assert(!plain.contains("__salt"), s"plain leg unexpectedly salted:\n$plain")
   }
+
+  test("key-ordered table: a deep page pushes its key range into the scan, countTotal aggregates nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_footers").toString
+    Sinks.writeSorted(spark.range(0, 20000).select(col("id").as("k"), (col("id") * 3).as("v")),
+      s"$dir/t.parquet", Seq("k"), numFiles = Some(4))
+    val df = new Catalog(spark, dir).table("t")
+    val page = Ops.page(df, Seq(col("k")), 180, 100)
+    val scan = executed(page).linesIterator.find(_.contains("PushedFilters:")).getOrElse("")
+    assert(scan.contains("GreaterThanOrEqual(k,") && scan.contains("LessThanOrEqual(k,"),
+      s"the page scans without its key range:\n$scan")
+    assert(page.collect().map(_.getLong(0)).toSeq == (17900L until 18000L))
+    assert(countExec(Ops.countTotal(df),
+      _.isInstanceOf[org.apache.spark.sql.execution.aggregate.HashAggregateExec]) == 0)
+  }
 }
