@@ -401,6 +401,7 @@ object Bench {
       // Match Verify's session TZ so date-bucketing queries (q_partition_prune's
       // to_date) produce the same shape under bench as under the oracle check.
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: touch every table (parquet footers, OS page cache,

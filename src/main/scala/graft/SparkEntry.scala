@@ -82,7 +82,7 @@ object SparkEntry {
     "q_ingest_copy" -> ((s, dir) => {
       val c = cat(s, dir)
       val tgt = scratch(s, "ingest_copy")
-      Sinks.ingestCopy(c.customer, Seq("c_custkey", "c_name", "c_acctbal"), tgt)
+      Sinks.ingestCopyObserved(s, c.customer, Seq("c_custkey", "c_name", "c_acctbal"), tgt)
       s.read.parquet(tgt).orderBy("c_custkey")
     }),
     "q_all_string_cast" -> ((s, dir) => {

@@ -27,11 +27,12 @@ import SparkEntry.cat
   * fold jobs, and a restart drill (two lifecycles BY DESIGN — the
   * stop/restore IS the product) at ~2s plus the same: the observed
   * 0.7–4.0s floors sit at the machinery cost, not on anything this tier
-  * can shed. The knobs that matter are already set in
-  * [[graft.streaming.EventStreams.drainOnce]] (shuffle partitions pinned
-  * to 2, no-data micro-batches off unless emission needs them, state-store
-  * providers unloaded after every drain, checkpoints on the FastTmp
-  * tmpfs). Do not trade drill semantics for the residue. */
+  * can shed. The knobs that matter are already set: the drain session
+  * ([[graft.streaming.EventStreams.drainSession]]) pins shuffle partitions
+  * to 2 and keeps no-data micro-batches off unless emission needs them,
+  * [[graft.streaming.EventStreams.drainOnce]] unloads state-store providers
+  * after every drain, and checkpoints sit on the FastTmp tmpfs. Do not trade
+  * drill semantics for the residue. */
 object StreamQueries {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

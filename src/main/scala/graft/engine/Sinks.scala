@@ -3,12 +3,13 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Sinks (SURVEY.md §2.9): CSV export, target-table materialization, batched
-  * ingest copy, and observable progress — re-expressed as single lazy Spark
-  * write pipelines instead of the reference's 1,000-row literal-INSERT loops
-  * (server.js:603-718), which were O(n²) reads via an unordered OFFSET
-  * cursor. One `df.write` is a single distributed job with atomic
-  * directory-commit semantics.
+/** Sinks (SURVEY.md §2.9): CSV export, target-table materialization and
+  * the ingest — re-expressed as single lazy Spark write pipelines instead of
+  * the reference's 1,000-row literal-INSERT loops (server.js:603-718), which
+  * were O(n²) reads via an unordered OFFSET cursor. One `df.write` is a
+  * single distributed job with atomic directory-commit semantics. There is
+  * one ingest, [[ingestCopyObserved]]; its optional progress callback is the
+  * reference's `{processed, total}` stream.
   */
 object Sinks {
 
@@ -59,12 +60,6 @@ object Sinks {
       .mkString(", ")
     s"CREATE TABLE IF NOT EXISTS $targetTable ($cols) ENGINE = $engine ORDER BY $orderBy"
   }
-
-  /** Ingest copy (K3/K4 + L3): projected copy of a source into a parquet
-    * "table". Replaces the reference's paged SELECT/INSERT loop with one
-    * shuffle-free scan→project→write job. */
-  def ingestCopy(df: DataFrame, cols: Seq[String], targetPath: String): Unit =
-    df.select(cols.map(col): _*).write.mode("overwrite").parquet(targetPath)
 
   /** Writer configured for a real ClickHouse target over JDBC (K2-K4's
     * production path): DDL options carry the reference's engine clause, rows
@@ -171,82 +166,80 @@ object Sinks {
     (files.length, listParquet(outPath).length)
   }
 
-  /** Incremental ingest progress (K5): the reference streams an NDJSON
-    * `{processed, total}` chunk after every 1,000-row batch
-    * (server.js:645-649, consumed at App.jsx:206-219). Spark's write is one
-    * distributed job, so "a batch finished" becomes "a write task finished":
-    * a SparkListener accumulates each task's `outputMetrics.recordsWritten`
-    * and invokes `onProgress(processed, total)` with the running total —
-    * monotonic, true counts (the reference reports `total === count`, so its
-    * percentage is always 100 — a bug we do not replicate).
+  /** The ingest (K3-K5, server.js:603-655): a projected copy of a source
+    * into a parquet "table" — one shuffle-free scan→project→write job in
+    * place of the reference's paged SELECT/INSERT loop. Returns the true
+    * written row count, read off the write's own `observe` metric (the
+    * reference reports `total === count`, so its percentage is always 100 —
+    * a bug we do not replicate).
     *
-    * Only tasks of THIS write's job group are counted, so concurrent jobs on
-    * the same session don't pollute the stream. Listener events post
-    * asynchronously; the method drains until the final count (from the same
-    * write's `observe` metric) has been reported or 10s elapse, so the event
-    * log is complete when it returns. Returns (rowsWritten, progressEvents).
-    */
-  def ingestCopyProgress(spark: SparkSession, df: DataFrame, cols: Seq[String],
-                         targetPath: String,
-                         onProgress: (Long, Long) => Unit = (_, _) => ())
-      : (Long, Seq[(Long, Long)]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-    val projected = df.select(cols.map(col): _*)
-    // One cheap count pass for the reference's `total` field: at scale this
-    // reads parquet row-group metadata only (count-star pushdown).
-    val total = projected.count()
-    val tag = s"graft-ingest-${java.util.UUID.randomUUID()}"
-    val events = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[(Long, Long)]())
-    val processed = new java.util.concurrent.atomic.AtomicLong(0L)
-    val myStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (tag == e.properties.getProperty("spark.jobGroup.id"))
-          e.stageIds.foreach(id => myStages.add(id))
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (myStages.contains(e.stageId)) {
-          val recs = Option(e.taskMetrics).map(_.outputMetrics.recordsWritten).getOrElse(0L)
-          if (recs > 0) {
-            val p = processed.addAndGet(recs)
-            events.add((p, total))
-            onProgress(p, total)
-          }
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(tag, s"ingest copy -> $targetPath",
-        interruptOnCancel = false)
-      val obs = org.apache.spark.sql.Observation(s"rows_$tag")
-      projected.observe(obs, count(lit(1)).as("rows_written"))
-        .write.mode("overwrite").parquet(targetPath)
-      val written = obs.get("rows_written").asInstanceOf[Long]
-      // Listener bus is async: wait for the last task's event to land.
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (processed.get() < written && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      (written, scala.jdk.CollectionConverters.ListHasAsScala(events).asScala.toSeq)
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
-
-  /** Ingest with true progress accounting (K5). The reference emits NDJSON
-    * progress chunks where `total === count` at write time (reported % is
-    * always 100 — a reference bug, server.js:645-649). We report true row
-    * counts via `observe`, collected by a QueryExecutionListener or read off
-    * the returned observation after the action completes. */
+    * `onProgress(processed, total)` is the reference's NDJSON
+    * `{processed, total}` stream. Spark's write is one distributed job, so
+    * "a batch finished" becomes "a write task finished": a SparkListener adds
+    * each task's `outputMetrics.recordsWritten`, counting only the stages of
+    * jobs that carry this call's private local property, so concurrent jobs
+    * on the same session never pollute the stream. The property's previous
+    * value is restored afterwards; the caller's job group is never touched.
+    * `total` comes from [[Ops.countTotal]] on the projection (footer row
+    * counts, no job, for a plain Parquet source). Listener events post
+    * asynchronously, so the call waits until the final count has been
+    * reported (or 10 s elapse) before it returns. Without a callback the
+    * call is the bare select → observe → write. */
   def ingestCopyObserved(spark: SparkSession, df: DataFrame, cols: Seq[String],
-                         targetPath: String): Long = {
+                         targetPath: String,
+                         onProgress: Option[(Long, Long) => Unit] = None): Long = {
+    val projected = df.select(cols.map(col): _*)
     // Observation registers its own QueryExecutionListener, so the metric is
     // captured from the write's QueryExecution (df.write plans a fresh one —
     // reading observedMetrics off the pre-write plan would always miss).
     val obs = org.apache.spark.sql.Observation("ingest_progress")
-    df.select(cols.map(col): _*)
-      .observe(obs, count(lit(1)).as("rows_written"))
-      .write.mode("overwrite").parquet(targetPath)
-    obs.get("rows_written").asInstanceOf[Long]
+    def write(): Long = {
+      projected.observe(obs, count(lit(1)).as("rows_written"))
+        .write.mode("overwrite").parquet(targetPath)
+      obs.get("rows_written").asInstanceOf[Long]
+    }
+    onProgress match {
+      case None => write()
+      case Some(report) => withProgress(spark, projected, report)(write())
+    }
+  }
+
+  private val ProgressTag = "graft.ingest.tag"
+
+  private def withProgress(spark: SparkSession, projected: DataFrame,
+                           report: (Long, Long) => Unit)(write: => Long): Long = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val total = Ops.countTotal(projected).head().getLong(0)
+    val tag = java.util.UUID.randomUUID().toString
+    val reported = new java.util.concurrent.atomic.AtomicLong(0L)
+    val myStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && tag == e.properties.getProperty(ProgressTag))
+          e.stageIds.foreach(id => myStages.add(id))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (myStages.contains(e.stageId)) {
+          val recs = Option(e.taskMetrics).map(_.outputMetrics.recordsWritten).getOrElse(0L)
+          if (recs > 0) { // publish only after the callback has seen it
+            val p = reported.get() + recs
+            report(p, total)
+            reported.set(p)
+          }
+        }
+    }
+    val saved = sc.getLocalProperty(ProgressTag)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(ProgressTag, tag)
+    try {
+      val written = write
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (reported.get() < written && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      written
+    } finally {
+      sc.setLocalProperty(ProgressTag, saved)
+      sc.removeSparkListener(listener)
+    }
   }
 }

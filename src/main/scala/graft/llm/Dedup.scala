@@ -662,8 +662,4 @@ object Dedup {
         "src", "dst").localCheckpoint(eager = true)
     }
   }
-
-  /** Test/ops hook: number of live dup-graph memo entries (stopped-session
-    * keys purged first). */
-  def graphCacheSize: Int = graphs.size
 }

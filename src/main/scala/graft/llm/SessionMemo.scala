@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Session memo for build-once fits (IVF index, dup graph, BPE, Unigram,
   * PQ): a long-lived session fits an index or model once and probes it many
@@ -9,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *
   * Keyed on (session, CANONICALIZED input plan, params) — equality-checked,
   * not hashed, so two different corpora can never collide into one entry.
+  * A value built from no input plan is keyed on (session, params) alone.
   * Entries of stopped sessions are purged on access without `release`
   * (their storage died with the executors). An access-ordered LRU holds at
   * most [[SessionMemo.MaxEntries]] entries; `release` frees the storage of
@@ -22,7 +22,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * that want a different key. Two threads missing on the same key both
   * build; `putIfAbsent` keeps the winner and the loser is released. */
 private[graft] final class SessionMemo[V](release: V => Unit) {
-  private type Key = (SparkSession, LogicalPlan, Seq[Any])
+  private type Key = (SparkSession, Seq[Any])
 
   private val entries: java.util.Map[Key, V] =
     java.util.Collections.synchronizedMap(
@@ -35,14 +35,19 @@ private[graft] final class SessionMemo[V](release: V => Unit) {
       })
 
   private def key(df: DataFrame, params: Seq[Any]): Key =
-    (df.sparkSession, df.queryExecution.analyzed.canonicalized, params)
+    (df.sparkSession, df.queryExecution.analyzed.canonicalized +: params)
 
   private def purgeStopped(): Unit =
     entries.keySet.removeIf(k => k._1.sparkContext.isStopped)
 
-  def getOrBuild(df: DataFrame, params: Any*)(build: => V): V = {
+  def getOrBuild(df: DataFrame, params: Any*)(build: => V): V =
+    getOrBuildKey(key(df, params), build)
+
+  def getOrBuild(spark: SparkSession, params: Any*)(build: => V): V =
+    getOrBuildKey((spark, params), build)
+
+  private def getOrBuildKey(k: Key, build: => V): V = {
     purgeStopped()
-    val k = key(df, params)
     Option(entries.get(k)).getOrElse {
       val built = build
       Option(entries.putIfAbsent(k, built)) match {

@@ -327,13 +327,15 @@ object Similarity {
     }
   }
 
-  /** ANN top-k via IVF: probe the `nProbe` lists whose centroids are nearest
-    * the query (driver-side math over nLists centroids), brute-force cosine
-    * within the probed lists only — corpus scanned ∝ nProbe/nLists. The
-    * recall/cost trade-off knob is nProbe; nProbe = nLists degrades to exact
-    * brute force. The fitted index is memoized per (session, input, params);
-    * pass `refit = true` to force a rebuild (e.g. after the corpus changed
-    * behind an identical plan). */
+  /** ANN top-k via IVF: pick the `nProbe` lists whose centroids are nearest
+    * the query (driver-side math over nLists centroids), then brute-force
+    * cosine over the rows of those lists. The list filter runs over the whole
+    * cached index, so every call still scans the full corpus; only the
+    * scoring work shrinks to ∝ nProbe/nLists. The persisted layout of
+    * [[writeIvfIndex]] is what prunes the scan itself. The recall knob is
+    * nProbe; nProbe = nLists degrades to exact brute force. The fitted index
+    * is memoized per (session, input, params); pass `refit = true` to force a
+    * rebuild (e.g. after the corpus changed behind an identical plan). */
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
               query: Seq[Double], k: Int, nLists: Int = 16, nProbe: Int = 4,
               seed: Long = 42L, refit: Boolean = false): DataFrame = {

@@ -25,16 +25,16 @@ object EventStreams {
     * engine: parquet file source → tumbling `window()` agg → memory sink,
     * drained synchronously. Complete output mode so every window is emitted;
     * the watermark/append shape is [[watermarkedSliding]]. */
-  def runHourlyStreamingOnce(spark: SparkSession, parquetPath: String,
+  def runHourlyStreamingOnce(caller: SparkSession, parquetPath: String,
                              queryName: String = "graft_stream_hourly"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = drainSession(caller)
     val schema = spark.read.parquet(parquetPath).schema
     val dir = stageToDir(parquetPath, queryName)
     val stream = normalizeNanos(spark.readStream.schema(schema).parquet(dir))
     val agg = stream
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("c"), sum("value").as("v_raw"))
-    drainOnce(spark, agg, queryName, "complete")
+    drainOnce(agg, queryName, "complete")
       .select(col("window.start").as("h"), col("event_type"), col("c"),
         round(col("v_raw"), 2).as("v"))
       .orderBy("h", "event_type")
@@ -117,13 +117,40 @@ object EventStreams {
   /** Hive-style partition column names of a directory table, outermost
     * first — read off the first `col=value` subdir chain (every chain has
     * the same columns in a valid layout). Empty for flat tables. */
-  private[streaming] def partitionColsOf(dir: java.io.File): Seq[String] = {
+  private def partitionColsOf(dir: java.io.File): Seq[String] = {
     val sub = Option(dir.listFiles()).getOrElse(Array.empty)
       .find(f => f.isDirectory && f.getName.contains("="))
     sub match {
       case Some(d) => d.getName.takeWhile(_ != '=') +: partitionColsOf(d)
       case None => Seq.empty
     }
+  }
+
+  /** The latest event, re-keyed to `userId` and pushed 100 days out — a
+    * stream-closure sentinel. `ts` is ns-as-long in the generator's
+    * single-file shape but a real TimestampType on Spark-written tables, so
+    * it is bumped in the column's own unit either way. */
+  private[streaming] def farFutureEvent(events: DataFrame, userId: Long): DataFrame = {
+    val bumped =
+      if (events.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+        col("ts") + lit(100L * 86400L * 1000000000L)
+      else col("ts") + expr("INTERVAL 100 DAYS")
+    events.orderBy(col("ts").desc).limit(1)
+      .withColumn("user_id", lit(userId))
+      .withColumn("ts", bumped)
+  }
+
+  /** Append sentinel rows beside the input staged in `dir` (a
+    * [[stageWritableDir]]), so the file source reads them as part of the
+    * same replay. A PARTITIONED table's sentinel must land inside a
+    * partition subdir: a bare root-level file next to `col=value` subdirs
+    * makes partition discovery throw "conflicting directory structures" —
+    * so mirror the staged layout's partition columns (read off the dir
+    * names). */
+  private[streaming] def appendSentinels(rows: DataFrame, dir: String): Unit = {
+    val partCols = partitionColsOf(new java.io.File(dir))
+    if (partCols.isEmpty) rows.write.mode("append").parquet(dir)
+    else rows.write.partitionBy(partCols: _*).mode("append").parquet(dir)
   }
 
   private[streaming] def stageWritableDir(parquetPath: String, name: String): String = {
@@ -137,34 +164,39 @@ object EventStreams {
     dir.toString
   }
 
-  /** Run a streaming plan to completion against a staged file source and
-    * return the drained memory-sink table. Shuffle partitions are pinned
-    * low for the one-shot drain (state-store instances scale with them).
-    * `noDataBatches` stays off unless the plan's emissions depend on a
-    * watermark advancing AFTER the last data batch (append-mode windows). */
-  private[streaming] def drainOnce(spark: SparkSession, plan: DataFrame,
-                        queryName: String, outputMode: String,
-                        noDataBatches: Boolean = false): DataFrame = {
-    spark.catalog.dropTempView(queryName) // re-runnable within one session
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedNoData = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    val q = try {
-      // 2, not the session's 32: every stateful operator spins one state
-      // store per shuffle partition (a stream-stream join spins FOUR), and a
-      // one-shot drain over a handful of keys pays that setup cost per store.
-      spark.conf.set("spark.sql.shuffle.partitions", "2")
-      // No-data micro-batches exist to advance watermarks and evict state on
-      // a live stream; a drain-and-stop query has no one downstream to evict
-      // for, so skip the extra empty batch — except when emission itself
-      // waits on the post-batch watermark (see runSessionWindowStreamingOnce).
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
+  /** The session every runner builds its whole plan on (batch reads and
+    * `readStream` alike: a file relation keeps the session that built it):
+    * a clone of the caller's with the drain settings set once, at creation,
+    * so no runner writes the caller's conf. `shuffle.partitions = 2`, since
+    * every stateful operator spins one state store per shuffle partition;
+    * `nanosAsLong`, for [[graft.engine.TsNorm]]; no-data micro-batches only
+    * when emission waits on the watermark advancing after the last data
+    * batch. Spark never removes a session's streaming listener bus from the
+    * shared bus, so clones are memoized (LRU of `SessionMemo.MaxEntries`)
+    * by caller, its `conf.getAll` and `noDataBatches`: a later caller conf
+    * change (say, its time zone) still reaches the next drain. */
+  private[streaming] def drainSession(caller: SparkSession,
+                                      noDataBatches: Boolean = false): SparkSession =
+    drainSessions.getOrBuild(caller, caller.conf.getAll, noDataBatches) {
+      val s = org.apache.spark.sql.GraftSqlBridge.cloneSession(caller)
+      s.conf.set("spark.sql.shuffle.partitions", "2")
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
         noDataBatches.toString)
-      plan.writeStream.outputMode(outputMode)
-        .format("memory").queryName(queryName).start()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", savedNoData)
+      s
     }
+
+  private val drainSessions = new graft.llm.SessionMemo[SparkSession](_ => ())
+
+  /** Run a streaming plan (built on a [[drainSession]]) to completion against
+    * a staged file source and return the drained memory-sink table, which is
+    * registered in the plan's session under `queryName`. */
+  private[streaming] def drainOnce(plan: DataFrame, queryName: String,
+                                   outputMode: String): DataFrame = {
+    val spark = plan.sparkSession
+    spark.catalog.dropTempView(queryName) // re-runnable within one session
+    val q = plan.writeStream.outputMode(outputMode)
+      .format("memory").queryName(queryName).start()
     try q.processAllAvailable() finally q.stop()
     // One-shot drains never reuse their state stores (fresh checkpoint per
     // run), but loaded providers linger in the executor-wide registry where
@@ -184,46 +216,28 @@ object EventStreams {
     * No-data micro-batches are ON here: when all files land in one batch,
     * the emission happens in the empty batch after that batch's watermark
     * update. */
-  def runSessionWindowStreamingOnce(spark: SparkSession, parquetPath: String,
+  def runSessionWindowStreamingOnce(caller: SparkSession, parquetPath: String,
                                     gap: String = "30 minutes",
                                     queryName: String = "graft_stream_session"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = drainSession(caller, noDataBatches = true)
     val batchDf = spark.read.parquet(parquetPath)
     val schema = batchDf.schema
     // Writable staging, NOT the pass-through: the sentinel below is appended
     // into this directory, and appending into the source table would mutate
     // user data (round-6 scale-probe near-miss).
     val dir = stageWritableDir(parquetPath, queryName)
-    // Sentinel: the latest event, re-keyed to user −1 and pushed 100 days
-    // out. `ts` is ns-as-long in the generator's single-file shape but a
-    // real TimestampType on Spark-written tables — bump in the column's own
-    // unit either way. Written beside the staged input so the file source
-    // reads it as part of the same replay.
-    val bumped =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        col("ts") + lit(100L * 86400L * 1000000000L)
-      else col("ts") + expr("INTERVAL 100 DAYS")
-    // A PARTITIONED table's sentinel must land inside a partition subdir:
-    // a bare root-level file next to `col=value` subdirs makes partition
-    // discovery throw "conflicting directory structures" — so mirror the
-    // staged layout's partition columns (read off the dir names).
-    val partCols = partitionColsOf(new java.io.File(dir))
     // Sentinel key = Long.MinValue, NOT −1: a corpus with negative user
     // ids would collide with −1 and have real rows silently dropped by the
     // strip filter; MinValue cannot be produced by any generator here and
     // the strip is a strict > comparison, so only the sentinel dies.
-    val sentinel = batchDf.orderBy(col("ts").desc).limit(1)
-      .withColumn("user_id", lit(Long.MinValue))
-      .withColumn("ts", bumped)
-    if (partCols.isEmpty) sentinel.write.mode("append").parquet(dir)
-    else sentinel.write.partitionBy(partCols: _*).mode("append").parquet(dir)
+    appendSentinels(farFutureEvent(batchDf, Long.MinValue), dir)
     val sessions = normalizeNanos(spark.readStream.schema(schema).parquet(dir))
       .withWatermark("ts", "0 seconds")
       .groupBy(col("user_id"), session_window(col("ts"), gap))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), col("session_window.start").as("start_ts"),
         col("session_window.end").as("end_ts"), col("n_events"))
-    drainOnce(spark, sessions, queryName, "append", noDataBatches = true)
+    drainOnce(sessions, queryName, "append")
       .filter(col("user_id") > Long.MinValue)
       .orderBy("user_id", "start_ts")
   }
@@ -235,9 +249,9 @@ object EventStreams {
     * (without the interval bound + watermarks, both sides' state grows
     * forever). Inner-join results emit as soon as they match, so a one-shot
     * drain yields the complete batch-equivalent answer. */
-  def runStreamStreamJoinOnce(spark: SparkSession, parquetPath: String,
+  def runStreamStreamJoinOnce(caller: SparkSession, parquetPath: String,
                               queryName: String = "graft_stream_ssjoin"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = drainSession(caller)
     val schema = spark.read.parquet(parquetPath).schema
     val dir = stageToDir(parquetPath, queryName)
     def src() = normalizeNanos(spark.readStream.schema(schema).parquet(dir))
@@ -253,7 +267,7 @@ object EventStreams {
         col("e_ts") >= col("p_ts") &&
         col("e_ts") < col("p_ts") + expr("INTERVAL 1 HOUR"))
       .select("purchase_id", "error_id")
-    drainOnce(spark, joined, queryName, "append")
+    drainOnce(joined, queryName, "append")
       .orderBy("purchase_id", "error_id")
   }
 
@@ -280,32 +294,22 @@ object EventStreams {
                                  queryName: String = "graft_stream_fojoin"): DataFrame =
     runStreamOuterJoinImpl(spark, parquetPath, queryName, "fullOuter")
 
-  private def runStreamOuterJoinImpl(spark: SparkSession, parquetPath: String,
+  private def runStreamOuterJoinImpl(caller: SparkSession, parquetPath: String,
                                      queryName: String, joinType: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = drainSession(caller, noDataBatches = true)
     val batchDf = spark.read.parquet(parquetPath)
     val schema = batchDf.schema
     val dir = stageWritableDir(parquetPath, queryName)
-    val bumped =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        col("ts") + lit(100L * 86400L * 1000000000L)
-      else col("ts") + expr("INTERVAL 100 DAYS")
-    val partCols = partitionColsOf(new java.io.File(dir))
     // Same non-colliding sentinel key as the session drill: MinValue,
     // never −1, so negative real user ids survive the strip below. BOTH
     // side sentinels ride ONE topK scan (checkpointed — each union branch
     // would re-run the scan) and ONE append write; the per-side loop paid
     // a full orderBy-limit scan plus a write job per side for identical
     // rows.
-    val top = batchDf.orderBy(col("ts").desc).limit(1)
-      .withColumn("user_id", lit(Long.MinValue))
-      .withColumn("ts", bumped)
-      .localCheckpoint(eager = true)
-    val sentinels = Seq("purchase", "error")
+    val top = farFutureEvent(batchDf, Long.MinValue).localCheckpoint(eager = true)
+    appendSentinels(Seq("purchase", "error")
       .map(side => top.withColumn("event_type", lit(side)))
-      .reduce(_.unionAll(_))
-    if (partCols.isEmpty) sentinels.write.mode("append").parquet(dir)
-    else sentinels.write.partitionBy(partCols: _*).mode("append").parquet(dir)
+      .reduce(_.unionAll(_)), dir)
     def src() = normalizeNanos(spark.readStream.schema(schema).parquet(dir))
     val purchases = src().filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"),
@@ -325,7 +329,7 @@ object EventStreams {
       .select(coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
         coalesce(col("user_id"), col("e_user")).as("u"),
         coalesce(col("error_id"), lit(-1L)).as("error_id"))
-    drainOnce(spark, joined, queryName, "append", noDataBatches = true)
+    drainOnce(joined, queryName, "append")
       .filter(col("u") > Long.MinValue)
       .select("purchase_id", "error_id")
       .orderBy("purchase_id", "error_id")
@@ -341,9 +345,9 @@ object EventStreams {
     * derivable (and oracle-checked): on-time rows only, days whose end ≤
     * max(ts) − 1 hour — the pinned statement of what a 24/7 pipeline
     * silently does to late data, made inspectable. */
-  def runLateDataDropOnce(spark: SparkSession, parquetPath: String,
+  def runLateDataDropOnce(caller: SparkSession, parquetPath: String,
                           queryName: String = "graft_stream_late"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = drainSession(caller, noDataBatches = true)
     val batchDf = spark.read.parquet(parquetPath)
     val schema = batchDf.schema
     val isLong = schema("ts").dataType == org.apache.spark.sql.types.LongType
@@ -377,7 +381,7 @@ object EventStreams {
       .groupBy(window(col("ts"), "1 day").as("w"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").cast("date").as("day"), col("n"))
-    drainOnce(spark, counts, queryName, "append", noDataBatches = true)
+    drainOnce(counts, queryName, "append")
       .orderBy("day")
   }
 
@@ -386,17 +390,17 @@ object EventStreams {
     * streaming dropDuplicates, evicts key state once the watermark passes —
     * the only dedup that survives an unbounded stream. Projected to the key
     * columns, the output is the deterministic distinct key set. */
-  def runStreamingDedupOnce(spark: SparkSession, parquetPath: String,
+  def runStreamingDedupOnce(caller: SparkSession, parquetPath: String,
                             keys: Seq[String],
                             queryName: String = "graft_stream_dedup"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = drainSession(caller)
     val schema = spark.read.parquet(parquetPath).schema
     val dir = stageToDir(parquetPath, queryName)
     val deduped = normalizeNanos(spark.readStream.schema(schema).parquet(dir))
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
       .select(keys.map(col): _*)
-    drainOnce(spark, deduped, queryName, "append")
+    drainOnce(deduped, queryName, "append")
       .orderBy(keys.map(col): _*)
   }
 
@@ -418,10 +422,10 @@ object EventStreams {
     * the memory sink is a test harness): filter the stream, append parquet
     * with a checkpoint — the commit log is what makes restarts exactly-once
     * — then read the committed output back as a batch frame. */
-  def runStreamToParquetOnce(spark: SparkSession, parquetPath: String,
+  def runStreamToParquetOnce(caller: SparkSession, parquetPath: String,
                              filterExpr: org.apache.spark.sql.Column,
                              queryName: String = "graft_stream_fsink"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = drainSession(caller, noDataBatches = true)
     val schema = spark.read.parquet(parquetPath).schema
     val dir = stageToDir(parquetPath, queryName)
     val outDir  = freshDir(s"graft_fsink_out_$queryName")
@@ -445,9 +449,9 @@ object EventStreams {
     * commit log are the mechanism). Double-processing wave 1 would double
     * the counts, so a batch oracle over the full source verifies the
     * recovery semantics end-to-end. */
-  def runStreamRestartOnce(spark: SparkSession, parquetPath: String,
+  def runStreamRestartOnce(caller: SparkSession, parquetPath: String,
                            queryName: String = "graft_stream_restart"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = drainSession(caller, noDataBatches = true)
     val batch = spark.read.parquet(parquetPath)
     val schema = batch.schema
     val srcDir  = freshDir(s"graft_restart_src_$queryName")
@@ -485,10 +489,10 @@ object EventStreams {
     * streaming query run batch writers; the fold result is
     * localCheckpoint'd before the overwrite so the target can be read and
     * rewritten in the same batch. */
-  def runStreamUpsertOnce(spark: SparkSession, parquetPath: String,
+  def runStreamUpsertOnce(caller: SparkSession, parquetPath: String,
                           keyCol: String, orderCols: Seq[org.apache.spark.sql.Column],
                           queryName: String = "graft_stream_upsert"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = drainSession(caller, noDataBatches = true)
     val schema = spark.read.parquet(parquetPath).schema
     val dir = stageToDir(parquetPath, queryName)
     val targetDir = freshDir(s"graft_upsert_tgt_$queryName")
@@ -523,18 +527,18 @@ object EventStreams {
     * dimension (re-planned per micro-batch, so a small dimension broadcasts
     * each batch), then aggregates. Complete-mode drain returns the full
     * grouped result. */
-  def runStreamStaticJoinOnce(spark: SparkSession, parquetPath: String,
+  def runStreamStaticJoinOnce(caller: SparkSession, parquetPath: String,
                               dim: DataFrame, joinExpr: org.apache.spark.sql.Column,
                               groupCol: String,
                               queryName: String = "graft_stream_static"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = drainSession(caller)
     val schema = spark.read.parquet(parquetPath).schema
     val dir = stageToDir(parquetPath, queryName)
     val stream = normalizeNanos(spark.readStream.schema(schema).parquet(dir))
     val agg = stream.join(dim, joinExpr)
       .groupBy(col(groupCol))
       .agg(count(lit(1)).as("c"), sum("value").as("v_raw"))
-    drainOnce(spark, agg, queryName, "complete")
+    drainOnce(agg, queryName, "complete")
       .select(col(groupCol), col("c"), round(col("v_raw"), 2).as("v"))
       .orderBy(groupCol)
   }
@@ -564,9 +568,9 @@ object EventStreams {
     * order-insensitive). The ordered-step flags and the global reduce run on
     * the drained per-user frame; identical math to the batch q_funnel, so
     * the batch oracle verifies the streaming engine's answer. */
-  def runStreamFunnelOnce(spark: SparkSession, parquetPath: String,
+  def runStreamFunnelOnce(caller: SparkSession, parquetPath: String,
                           queryName: String = "graft_stream_funnel"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = drainSession(caller)
     val schema = spark.read.parquet(parquetPath).schema
     val dir = stageToDir(parquetPath, queryName)
     val perUser = normalizeNanos(spark.readStream.schema(schema).parquet(dir))
@@ -574,7 +578,7 @@ object EventStreams {
       .agg(min(when(col("event_type") === "view", col("ts"))).as("t1"),
         min(when(col("event_type") === "signup", col("ts"))).as("t2"),
         min(when(col("event_type") === "purchase", col("ts"))).as("t3"))
-    drainOnce(spark, perUser, queryName, "complete")
+    drainOnce(perUser, queryName, "complete")
       .agg(count(lit(1)).as("n_users"),
         sum(when(col("t1").isNotNull, 1L).otherwise(0L)).as("s_view"),
         sum(when(col("t1").isNotNull && col("t2") > col("t1"), 1L)

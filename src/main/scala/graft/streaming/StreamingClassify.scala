@@ -22,28 +22,31 @@ import graft.llm.{Classify, TextStats}
   */
 object StreamingClassify {
 
+  /** The q_text_classifier features: label lang = 'en', L2-normalized
+    * 64-dim hashedTf. */
+  private def featurize(df: DataFrame): DataFrame = {
+    val rawV = TextStats.hashedTf(col("text"), 64)
+    df.select(col("doc_id").as("vid"),
+        when(col("lang") === "en", 1.0).otherwise(0.0).as("y"), rawV.as("rv"))
+      .withColumn("nrm",
+        sqrt(graft.functions.ArrayKernels.dot(col("rv"), col("rv"))))
+      .select(col("vid"), col("y"),
+        when(col("nrm") > 0, transform(col("rv"), x => x / col("nrm")))
+          .otherwise(col("rv")).as("v"))
+  }
+
   /** Drain a documents parquet table through the streaming scorer: batch-
     * train on the training split (positive = lang 'en', L2-normalized
     * 64-dim hashedTf — the q_text_classifier model exactly), then score the
     * held-out panel as a file STREAM and roll up per-class calibration.
     * Output == the batch q_text_classifier frame, which is what the parity
     * contract (and the shared DuckDB oracle) checks. */
-  def runStreamClassifyOnce(spark: SparkSession, parquetPath: String,
+  def runStreamClassifyOnce(caller: SparkSession, parquetPath: String,
                             queryName: String = "graft_stream_classify"): DataFrame = {
+    val spark = EventStreams.drainSession(caller)
     val batch = spark.read.parquet(parquetPath)
     val schema = batch.schema
     val dir = EventStreams.stageToDir(parquetPath, queryName)
-
-    def featurize(df: DataFrame): DataFrame = {
-      val rawV = TextStats.hashedTf(col("text"), 64)
-      df.select(col("doc_id").as("vid"),
-          when(col("lang") === "en", 1.0).otherwise(0.0).as("y"), rawV.as("rv"))
-        .withColumn("nrm",
-          sqrt(graft.functions.ArrayKernels.dot(col("rv"), col("rv"))))
-        .select(col("vid"), col("y"),
-          when(col("nrm") > 0, transform(col("rv"), x => x / col("nrm")))
-            .otherwise(col("rv")).as("v"))
-    }
 
     // Offline fit: identical split, featurization, and trajectory as the
     // batch query — the weights ARE the q_text_classifier weights.
@@ -55,8 +58,7 @@ object StreamingClassify {
     val scored = featurize(spark.readStream.schema(schema).parquet(dir))
       .filter(Classify.isTestRow(col("vid")))
       .select(col("y"), Classify.logregProb(wts, col("v")).as("p"))
-    EventStreams.drainOnce(spark, Classify.calibration(scored),
-        queryName, "complete")
+    EventStreams.drainOnce(Classify.calibration(scored), queryName, "complete")
       .orderBy("y")
   }
 
@@ -73,24 +75,15 @@ object StreamingClassify {
     * Model restart semantics are the module contract: weights are plan
     * literals, so the restarted query carries the identical model with no
     * side artifact to reload. */
-  def runStreamClassifyRestart(spark: SparkSession, parquetPath: String,
+  def runStreamClassifyRestart(caller: SparkSession, parquetPath: String,
                                queryName: String = "graft_stream_classify_restart"): DataFrame = {
+    val spark = EventStreams.drainSession(caller, noDataBatches = true)
     val batch = spark.read.parquet(parquetPath)
     val schema = batch.schema
     val srcDir  = EventStreams.freshDir(s"graft_clsrestart_src_$queryName")
     val outDir  = EventStreams.freshDir(s"graft_clsrestart_out_$queryName")
     val ckptDir = EventStreams.freshDir(s"graft_clsrestart_ckpt_$queryName")
 
-    def featurize(df: DataFrame): DataFrame = {
-      val rawV = TextStats.hashedTf(col("text"), 64)
-      df.select(col("doc_id").as("vid"),
-          when(col("lang") === "en", 1.0).otherwise(0.0).as("y"), rawV.as("rv"))
-        .withColumn("nrm",
-          sqrt(graft.functions.ArrayKernels.dot(col("rv"), col("rv"))))
-        .select(col("vid"), col("y"),
-          when(col("nrm") > 0, transform(col("rv"), x => x / col("nrm")))
-            .otherwise(col("rv")).as("v"))
-    }
     val wts = Classify.logregWeights(
       featurize(batch).filter(!Classify.isTestRow(col("vid"))), "v", "y")
 

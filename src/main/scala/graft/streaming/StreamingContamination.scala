@@ -33,9 +33,10 @@ object StreamingContamination {
     * through the decontaminator and return (train_id, n_eval_docs) for
     * every train doc sharing at least one 8-token shingle with a benchmark
     * (`evalSource`) doc. */
-  def contaminateOnce(spark: SparkSession, parquetPath: String,
+  def contaminateOnce(caller: SparkSession, parquetPath: String,
                       evalSource: String = "src0",
                       queryName: String = "graft_stream_contamination"): DataFrame = {
+    val spark = EventStreams.drainSession(caller)
     val schema = spark.read.parquet(parquetPath).schema
     val evalSh = shingleHashes(
         spark.read.parquet(parquetPath).filter(col("source") === evalSource),
@@ -47,7 +48,7 @@ object StreamingContamination {
     val joined = shingleHashes(stream, "doc_id", "train_id")
       .join(broadcast(evalSh), "h")
       .select("train_id", "eval_id")
-    EventStreams.drainOnce(spark, joined, queryName, "append")
+    EventStreams.drainOnce(joined, queryName, "append")
       .groupBy("train_id")
       .agg(countDistinct("eval_id").as("n_eval_docs"))
       .orderBy("train_id")

@@ -21,8 +21,9 @@ object StreamingDrift {
     * compute per-source PSI against the batch-fitted corpus marginals.
     * Output == the batch q_source_drift frame, so one oracle checks both
     * paths. */
-  def runStreamDriftOnce(spark: SparkSession, parquetPath: String,
+  def runStreamDriftOnce(caller: SparkSession, parquetPath: String,
                          queryName: String = "graft_stream_drift"): DataFrame = {
+    val spark = EventStreams.drainSession(caller)
     val batch = spark.read.parquet(parquetPath)
     val schema = batch.schema
     // Offline fit: the reference distribution (64 rows + one scalar).
@@ -32,7 +33,7 @@ object StreamingDrift {
     val dir = EventStreams.stageToDir(parquetPath, queryName)
     val perSrc = Drift.bucketize(spark.readStream.schema(schema).parquet(dir))
       .groupBy("source", "b").agg(count(lit(1)).as("c"))
-    val drained = EventStreams.drainOnce(spark, perSrc, queryName, "complete")
+    val drained = EventStreams.drainOnce(perSrc, queryName, "complete")
     // Re-base the drained grid as a local frame: it is MODEL-sized
     // (|sources| × 64 rows — the same collect economics as the classifier
     // weights), and the memory-sink lineage otherwise trips Catalyst's
@@ -58,17 +59,16 @@ object StreamingDrift {
     * day +200) closes every real day, and its own day never emits. The
     * emitted day grids then SUM to exactly the complete-mode totals, so
     * the same batch q_source_drift oracle checks this path too. */
-  def runStreamDriftAppendOnce(spark: SparkSession, parquetPath: String,
+  def runStreamDriftAppendOnce(caller: SparkSession, parquetPath: String,
                                queryName: String = "graft_stream_drift_append"): DataFrame = {
+    val spark = EventStreams.drainSession(caller, noDataBatches = true)
     val batch = spark.read.parquet(parquetPath)
     val schema = batch.schema
     val corpus = Drift.bucketize(batch).groupBy("b").agg(count(lit(1)).as("cc"))
     val nc = corpus.agg(sum("cc")).head().getLong(0)
     val dir = EventStreams.stageWritableDir(parquetPath, queryName)
-    val partCols = EventStreams.partitionColsOf(new java.io.File(dir))
-    val sentinel = batch.limit(1).withColumn("doc_id", lit(Long.MinValue))
-    if (partCols.isEmpty) sentinel.write.mode("append").parquet(dir)
-    else sentinel.write.partitionBy(partCols: _*).mode("append").parquet(dir)
+    EventStreams.appendSentinels(
+      batch.limit(1).withColumn("doc_id", lit(Long.MinValue)), dir)
     // The sentinel branch matches Long.MinValue EXACTLY, never `< 0`: a
     // corpus with real negative doc_ids would otherwise land them on the
     // never-closing sentinel day and silently drop their tokens (the
@@ -87,8 +87,7 @@ object StreamingDrift {
         expr(s"CAST(conv(substring(md5(w), 1, 6), 16, 10) AS BIGINT) % ${Drift.Buckets}").as("b"))
       .groupBy(window(col("ts"), "1 day"), col("source"), col("b"))
       .agg(count(lit(1)).as("c"))
-    val drained = EventStreams.drainOnce(spark, perDay, queryName, "append",
-      noDataBatches = true)
+    val drained = EventStreams.drainOnce(perDay, queryName, "append")
     import spark.implicits._
     // Closed-day grids fold back to the lifetime totals (model-sized
     // collect, the runStreamDriftOnce economics).

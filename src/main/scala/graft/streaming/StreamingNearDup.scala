@@ -77,17 +77,18 @@ object StreamingNearDup {
     * multi-band collision reports one row. The consolidation is a batch
     * aggregate over the drained sink (stateless — not a second stateful
     * streaming operator). */
-  def detectOnce(spark: SparkSession, parquetPath: String,
+  def detectOnce(caller: SparkSession, parquetPath: String,
                  idCol: String = "doc_id", textCol: String = "text",
                  k: Int = 3, numHashes: Int = 128, bands: Int = 32,
                  seed: Long = 42L,
                  queryName: String = "graft_stream_neardup"): DataFrame = {
+    val spark = EventStreams.drainSession(caller)
     val schema = spark.read.parquet(parquetPath).schema
     val dir = EventStreams.stageToDir(parquetPath, queryName)
     val stream = spark.readStream.schema(schema).parquet(dir)
     val flags = flagStream(bucketHits(stream, idCol, textCol,
       k, numHashes, bands, seed))
-    EventStreams.drainOnce(spark, flags.toDF(), queryName, "append")
+    EventStreams.drainOnce(flags.toDF(), queryName, "append")
       .groupBy("doc_id")
       .agg(min("anchor_id").as("anchor_id"))
       .orderBy("doc_id")

@@ -18,9 +18,9 @@ object StreamingSketch {
 
   /** Drain the events table through the streaming CMS, then evaluate the
     * point-estimate panel. Output == the batch q_cms_counts frame. */
-  def runStreamCmsOnce(spark: SparkSession, parquetPath: String,
+  def runStreamCmsOnce(caller: SparkSession, parquetPath: String,
                        queryName: String = "graft_stream_cms"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = EventStreams.drainSession(caller)
     val raw = spark.read.parquet(parquetPath)
     val batch = TsNorm.normalizeTs(raw)
     val dir = EventStreams.stageToDir(parquetPath, queryName)
@@ -32,7 +32,7 @@ object StreamingSketch {
     val cells = keyed.select(Cms.jbs(col("k")).as("jb"))
       .select(col("jb.j").as("j"), col("jb.b").as("b"))
       .groupBy("j", "b").agg(count(lit(1)).as("c"))
-    val drained = EventStreams.drainOnce(spark, cells, queryName, "complete")
+    val drained = EventStreams.drainOnce(cells, queryName, "complete")
     // Re-base the drained grid locally (256 rows — model-sized, the
     // StreamingDrift collect economics) before joining the panel.
     import spark.implicits._
@@ -56,34 +56,24 @@ object StreamingSketch {
     * emitted day grids SUM to exactly the lifetime cell counts — CMS
     * cells are associative — so the same batch q_cms_counts oracle checks
     * this path too. */
-  def runStreamCmsAppendOnce(spark: SparkSession, parquetPath: String,
+  def runStreamCmsAppendOnce(caller: SparkSession, parquetPath: String,
                              queryName: String = "graft_stream_cms_append"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = EventStreams.drainSession(caller, noDataBatches = true)
     val raw = spark.read.parquet(parquetPath)
     val batch = TsNorm.normalizeTs(raw)
     val schema = raw.schema
     val dir = EventStreams.stageWritableDir(parquetPath, queryName)
-    val bumped =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        col("ts") + lit(100L * 86400L * 1000000000L)
-      else col("ts") + expr("INTERVAL 100 DAYS")
-    val partCols = EventStreams.partitionColsOf(new java.io.File(dir))
     // The sentinel's key never reaches the sink (its day never closes),
     // so it only needs to be hash-SAFE: Long.MinValue would overflow the
     // ANSI-mode affine CMS hash (a·k), so use 0.
-    val sentinel = raw.orderBy(col("ts").desc).limit(1)
-      .withColumn("user_id", lit(0L))
-      .withColumn("ts", bumped)
-    if (partCols.isEmpty) sentinel.write.mode("append").parquet(dir)
-    else sentinel.write.partitionBy(partCols: _*).mode("append").parquet(dir)
+    EventStreams.appendSentinels(EventStreams.farFutureEvent(raw, 0L), dir)
     val keyed = TsNorm.normalizeTs(spark.readStream.schema(schema).parquet(dir))
       .withWatermark("ts", "1 hour")
       .select(col("ts"), Cms.jbs(col("user_id").cast("long")).as("jb"))
       .select(col("ts"), col("jb.j").as("j"), col("jb.b").as("b"))
       .groupBy(window(col("ts"), "1 day"), col("j"), col("b"))
       .agg(count(lit(1)).as("c"))
-    val drained = EventStreams.drainOnce(spark, keyed, queryName, "append",
-      noDataBatches = true)
+    val drained = EventStreams.drainOnce(keyed, queryName, "append")
     import spark.implicits._
     // Closed-day grids fold back to the lifetime cell counts (256-row
     // collect, the runStreamCmsOnce economics); the sentinel's cells sit
@@ -109,9 +99,9 @@ object StreamingSketch {
     * across both runs, so ANY failure mode — re-emitted closed day, lost
     * open-day cells, watermark reset to zero — breaks the fold back to the
     * lifetime totals and misses the shared batch q_cms_counts oracle. */
-  def runStreamCmsAppendRestart(spark: SparkSession, parquetPath: String,
+  def runStreamCmsAppendRestart(caller: SparkSession, parquetPath: String,
                                 queryName: String = "graft_stream_cms_append_restart"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = EventStreams.drainSession(caller, noDataBatches = true)
     // Narrow staging: the grid touches only (ts, user_id), normalized once
     // so the staged schema is a plain timestamp.
     val batch = TsNorm.normalizeTs(spark.read.parquet(parquetPath))
@@ -120,23 +110,19 @@ object StreamingSketch {
     val outDir  = EventStreams.freshDir(s"graft_cmsrestart_out_$queryName")
     val ckptDir = EventStreams.freshDir(s"graft_cmsrestart_ckpt_$queryName")
     def runWave(): Unit = {
-      val saved = spark.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        spark.readStream.schema(batch.schema).parquet(srcDir)
-          .withWatermark("ts", "1 hour")
-          .select(col("ts"), Cms.jbs(col("user_id").cast("long")).as("jb"))
-          .select(col("ts"), col("jb.j").as("j"), col("jb.b").as("b"))
-          .groupBy(window(col("ts"), "1 day"), col("j"), col("b"))
-          .agg(count(lit(1)).as("c"))
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckptDir)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("append").parquet(outDir)
-          }
-          .start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+      val q = spark.readStream.schema(batch.schema).parquet(srcDir)
+        .withWatermark("ts", "1 hour")
+        .select(col("ts"), Cms.jbs(col("user_id").cast("long")).as("jb"))
+        .select(col("ts"), col("jb.j").as("j"), col("jb.b").as("b"))
+        .groupBy(window(col("ts"), "1 day"), col("j"), col("b"))
+        .agg(count(lit(1)).as("c"))
+        .writeStream
+        .outputMode("append")
+        .option("checkpointLocation", ckptDir)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.write.mode("append").parquet(outDir)
+        }
+        .start()
       try q.processAllAvailable() finally q.stop()
     }
     val days = batch.select(to_date(col("ts")).as("d")).distinct()
@@ -189,10 +175,10 @@ object StreamingSketch {
     * counts, producing the SAME frame as the batch q_kmv_distinct — one
     * oracle checks both paths, the [[runStreamCmsOnce]] parity
     * discipline. */
-  def runStreamKmvOnce(spark: SparkSession, parquetPath: String,
+  def runStreamKmvOnce(caller: SparkSession, parquetPath: String,
                        queryName: String = "graft_stream_kmv"): DataFrame = {
+    val spark = EventStreams.drainSession(caller)
     import graft.engine.Kmv
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(parquetPath)
     val batch = TsNorm.normalizeTs(raw)
     val dir = EventStreams.stageToDir(parquetPath, queryName)
@@ -205,7 +191,7 @@ object StreamingSketch {
         Kmv.hash(col("user_id").cast("long")).as("h"))
     val sketch = hashed.groupBy("event_type")
       .agg(Kmv.kMinValues(col("h")).as("mins"))
-    val drained = EventStreams.drainOnce(spark, sketch, queryName, "complete")
+    val drained = EventStreams.drainOnce(sketch, queryName, "complete")
     // Re-base the drained sketch locally (groups × K doubles — model-sized,
     // the runStreamCmsOnce collect economics) before joining the exact leg.
     import spark.implicits._
@@ -230,8 +216,9 @@ object StreamingSketch {
     * the offline exact percentiles, producing the SAME frame as the batch
     * q_hdr_quantile — one oracle checks both paths, the [[runStreamCmsOnce]]
     * parity discipline. */
-  def runStreamQuantileOnce(spark: SparkSession, parquetPath: String,
+  def runStreamQuantileOnce(caller: SparkSession, parquetPath: String,
                             queryName: String = "graft_stream_quantile"): DataFrame = {
+    val spark = EventStreams.drainSession(caller)
     import graft.engine.Hdr
     val raw = spark.read.parquet(parquetPath)
     val dir = EventStreams.stageToDir(parquetPath, queryName)
@@ -243,7 +230,7 @@ object StreamingSketch {
       .select(col("l_returnflag"), Hdr.cents(col("l_extendedprice")).as("c"))
     val counts = Hdr.withBucket(vals, "c")
       .groupBy("l_returnflag", "bkt").agg(count(lit(1)).as("cnt"))
-    val drained = EventStreams.drainOnce(spark, counts, queryName, "complete")
+    val drained = EventStreams.drainOnce(counts, queryName, "complete")
     // Re-base the drained grid locally (octaves × 8 rows per group —
     // model-sized, the runStreamCmsOnce collect economics).
     import spark.implicits._
@@ -268,8 +255,9 @@ object StreamingSketch {
     * restore would count wave 2 alone, shift the cumulative ranks, pick
     * different buckets, and miss the (shared) q_hdr_quantile oracle — the
     * [[runStreamKmvRestart]] discipline applied to grid state. */
-  def runStreamQuantileRestart(spark: SparkSession, parquetPath: String,
+  def runStreamQuantileRestart(caller: SparkSession, parquetPath: String,
                                queryName: String = "graft_stream_quantile_restart"): DataFrame = {
+    val spark = EventStreams.drainSession(caller, noDataBatches = true)
     import graft.engine.Hdr
     // Narrow staging: the grid touches only (l_returnflag, l_extendedprice),
     // the wave split only l_orderkey.
@@ -279,22 +267,18 @@ object StreamingSketch {
     val outDir  = EventStreams.freshDir(s"graft_qrestart_out_$queryName")
     val ckptDir = EventStreams.freshDir(s"graft_qrestart_ckpt_$queryName")
     def runWave(): Unit = {
-      val saved = spark.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        val vals = spark.readStream.schema(batch.schema).parquet(srcDir)
-          .filter(col("l_extendedprice") > 0)
-          .select(col("l_returnflag"), Hdr.cents(col("l_extendedprice")).as("c"))
-        Hdr.withBucket(vals, "c")
-          .groupBy("l_returnflag", "bkt").agg(count(lit(1)).as("cnt"))
-          .writeStream
-          .outputMode("complete")
-          .option("checkpointLocation", ckptDir)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("overwrite").parquet(outDir)
-          }
-          .start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+      val vals = spark.readStream.schema(batch.schema).parquet(srcDir)
+        .filter(col("l_extendedprice") > 0)
+        .select(col("l_returnflag"), Hdr.cents(col("l_extendedprice")).as("c"))
+      val q = Hdr.withBucket(vals, "c")
+        .groupBy("l_returnflag", "bkt").agg(count(lit(1)).as("cnt"))
+        .writeStream
+        .outputMode("complete")
+        .option("checkpointLocation", ckptDir)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.write.mode("overwrite").parquet(outDir)
+        }
+        .start()
       try q.processAllAvailable() finally q.stop()
     }
     batch.filter(col("l_orderkey") % 2 === 0).write.mode("append").parquet(srcDir)
@@ -327,10 +311,10 @@ object StreamingSketch {
     * exactly-once proof, the [[graft.streaming.StreamingClassify]] restart
     * discipline applied to stateful sketch state rather than a stateless
     * scorer. */
-  def runStreamKmvRestart(spark: SparkSession, parquetPath: String,
+  def runStreamKmvRestart(caller: SparkSession, parquetPath: String,
                           queryName: String = "graft_stream_kmv_restart"): DataFrame = {
+    val spark = EventStreams.drainSession(caller, noDataBatches = true)
     import graft.engine.Kmv
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Narrow staging: the sketch touches only (event_type, user_id), the
     // wave split only event_id — staging the full event rows would double
     // the drill's IO for columns no leg ever reads (and ts never enters,
@@ -341,29 +325,24 @@ object StreamingSketch {
     val outDir  = EventStreams.freshDir(s"graft_kmvrestart_out_$queryName")
     val ckptDir = EventStreams.freshDir(s"graft_kmvrestart_ckpt_$queryName")
     def runWave(): Unit = {
-      // Pinned-low shuffle partitions, consistently across BOTH waves: the
+      // Both waves run on the drain session's 2 shuffle partitions: the
       // checkpoint binds the state-store partitioning, so the restarted
-      // query must come up with the same count (the drainOnce economics,
-      // made durable).
-      val saved = spark.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        val hashed = spark.readStream.schema(batch.schema).parquet(srcDir)
-          .select(col("event_type"),
-            Kmv.hash(col("user_id").cast("long")).as("h"))
-        hashed.groupBy("event_type")
-          .agg(Kmv.kMinValues(col("h")).as("mins"))
-          .writeStream
-          .outputMode("complete")
-          .option("checkpointLocation", ckptDir)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            // Complete-mode snapshot: each micro-batch overwrites the full
-            // sketch table, so after the final batch the directory holds
-            // exactly the current state.
-            b.write.mode("overwrite").parquet(outDir)
-          }
-          .start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+      // query must come up with the same count.
+      val hashed = spark.readStream.schema(batch.schema).parquet(srcDir)
+        .select(col("event_type"),
+          Kmv.hash(col("user_id").cast("long")).as("h"))
+      val q = hashed.groupBy("event_type")
+        .agg(Kmv.kMinValues(col("h")).as("mins"))
+        .writeStream
+        .outputMode("complete")
+        .option("checkpointLocation", ckptDir)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          // Complete-mode snapshot: each micro-batch overwrites the full
+          // sketch table, so after the final batch the directory holds
+          // exactly the current state.
+          b.write.mode("overwrite").parquet(outDir)
+        }
+        .start()
       try q.processAllAvailable() finally q.stop()
     }
     batch.filter(col("event_id") % 2 === 0).write.mode("append").parquet(srcDir)

@@ -33,11 +33,11 @@ object StreamingTrending {
     * the sink; MG counts under the no-decrement regime only grow, so the
     * final count per (day, type) is the max across emissions — that fold plus
     * the bounded-heap TopKPerGroup yields the per-day ranking. */
-  def runStreamTrendingOnce(spark: SparkSession, parquetPath: String,
+  def runStreamTrendingOnce(caller: SparkSession, parquetPath: String,
                             topK: Int = 3, sketchK: Int = 8,
                             queryName: String = "graft_stream_trending"): DataFrame = {
+    val spark = EventStreams.drainSession(caller)
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(parquetPath).schema
     val dir = EventStreams.stageToDir(parquetPath, queryName)
     // The batch kernel, reused verbatim: Aggregator is Serializable, and its
@@ -58,8 +58,8 @@ object StreamingTrending {
           state.update(buf.toMap)
           buf.iterator.map { case (t, c) => (day, t, c) }.toSeq.iterator
       }
-    val drained = EventStreams.drainOnce(spark,
-      perDay.toDF("d", "event_type", "n"), queryName, "update")
+    val drained = EventStreams.drainOnce(perDay.toDF("d", "event_type", "n"),
+      queryName, "update")
     val finalCounts = drained.groupBy("d", "event_type").agg(max("n").as("n"))
     graft.plans.TopKPerGroup.topKPerGroup(finalCounts, Seq(col("d")),
         Seq(col("n").desc, col("event_type")), topK)
@@ -86,25 +86,16 @@ object StreamingTrending {
     * technique) advances the watermark past every real day; the sentinel's
     * own day stays un-emitted (nothing ever closes it) so it never reaches
     * the sink. */
-  def runWatermarkedTrendingOnce(spark: SparkSession, parquetPath: String,
+  def runWatermarkedTrendingOnce(caller: SparkSession, parquetPath: String,
                                  topK: Int = 3,
                                  queryName: String = "graft_stream_trending_append"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = EventStreams.drainSession(caller, noDataBatches = true)
     val batchDf = spark.read.parquet(parquetPath)
     val schema = batchDf.schema
     // Writable staging (NOT the pass-through): the sentinel is appended
     // beside the staged input, never into the source table.
     val dir = EventStreams.stageWritableDir(parquetPath, queryName)
-    val bumped =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        col("ts") + lit(100L * 86400L * 1000000000L)
-      else col("ts") + expr("INTERVAL 100 DAYS")
-    val partCols = EventStreams.partitionColsOf(new java.io.File(dir))
-    val sentinel = batchDf.orderBy(col("ts").desc).limit(1)
-      .withColumn("user_id", lit(-1L))
-      .withColumn("ts", bumped)
-    if (partCols.isEmpty) sentinel.write.mode("append").parquet(dir)
-    else sentinel.write.partitionBy(partCols: _*).mode("append").parquet(dir)
+    EventStreams.appendSentinels(EventStreams.farFutureEvent(batchDf, -1L), dir)
     val counts = EventStreams.normalizeNanos(
         spark.readStream.schema(schema).parquet(dir))
       .withWatermark("ts", "1 hour")
@@ -112,8 +103,7 @@ object StreamingTrending {
       .agg(count(lit(1)).as("n"))
     // Emission happens in the no-data batch after the sentinel batch's
     // watermark update — same contract as the session-window drain.
-    val drained = EventStreams.drainOnce(spark, counts, queryName, "append",
-      noDataBatches = true)
+    val drained = EventStreams.drainOnce(counts, queryName, "append")
       .select(to_date(col("window.start")).as("d"), col("event_type"), col("n"))
     graft.plans.TopKPerGroup.topKPerGroup(drained, Seq(col("d")),
         Seq(col("n").desc, col("event_type")), topK)

@@ -26,6 +26,11 @@ object GraftSqlBridge {
   def convertedExpression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** A clone of `spark` (`cloneSession` is private[sql]): same SparkContext,
+    * its own copy of the conf, temp views and functions. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** Unload every registered state-store provider (private[sql]). One-shot
     * streaming drains never reuse their stores, but loaded providers keep
     * being snapshotted by the maintenance thread — a suite of drains

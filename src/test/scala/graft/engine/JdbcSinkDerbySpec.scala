@@ -76,10 +76,10 @@ class JdbcSinkDerbySpec extends AnyFunSuite {
     assert(back.filter($"id" === 1).count() == 2)
   }
 
-  test("JDBC ingest matches the parquet ingestCopy path row-for-row") {
+  test("JDBC ingest matches the parquet ingest row-for-row") {
     val dir = java.nio.file.Files.createTempDirectory("graft-jdbc-parity")
     val pq = dir.resolve("copy").toString
-    Sinks.ingestCopy(sample, Seq("id", "name", "price"), pq)
+    Sinks.ingestCopyObserved(spark, sample, Seq("id", "name", "price"), pq)
     Sinks.clickHouseJdbcWriter(sample, url, "GRAFT_PARITY",
         batchSize = 2, options = derbyOptions)
       .save()

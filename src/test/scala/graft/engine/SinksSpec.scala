@@ -35,10 +35,10 @@ class SinksSpec extends AnyFunSuite {
       "score Nullable(Float64)) ENGINE = MergeTree() ORDER BY tuple()")
   }
 
-  test("ingestCopy materializes the projected subset; re-read matches") {
+  test("ingest materializes the projected subset; re-read matches") {
     val df = Seq((3L, "c", 1.0), (1L, "a", 2.0), (2L, "b", 3.0)).toDF("k", "v", "x")
     val out = tmpDir("graft_ingest") + "/t"
-    Sinks.ingestCopy(df, Seq("k", "v"), out)
+    assert(Sinks.ingestCopyObserved(spark, df, Seq("k", "v"), out) == 3L)
     val back = spark.read.parquet(out)
     assert(back.columns.toSeq == Seq("k", "v"))
     assert(back.orderBy("k").as[(Long, String)].collect().toSeq ==
@@ -109,24 +109,54 @@ class SinksSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).count() == 123L)
   }
 
-  test("ingestCopyProgress streams >=2 monotonic true-count events (K5 parity)") {
+  /** Runs a progress ingest and returns (rows written, progress events). */
+  private def ingestWithProgress(df: org.apache.spark.sql.DataFrame,
+                                 cols: Seq[String], out: String): (Long, Seq[(Long, Long)]) = {
+    val events = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    val written = Sinks.ingestCopyObserved(spark, df, cols, out,
+      Some((p: Long, t: Long) => events.synchronized { events += ((p, t)); () }))
+    (written, events.synchronized(events.toSeq))
+  }
+
+  test("ingest progress streams >=2 monotonic true-count events (K5 parity)") {
     // 8 write partitions → 8 task-end events; the reference's per-batch
     // NDJSON chunks (server.js:645-649) map to per-task events here.
     val df = spark.range(0, 4000).toDF("k").withColumn("v", col("k") * 2)
       .repartition(8)
     val out = tmpDir("graft_ingest_prog") + "/t"
-    val cb = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val (written, events) =
-      Sinks.ingestCopyProgress(spark, df, Seq("k", "v"), out, (p, t) => {
-        cb.synchronized { cb += ((p, t)); () }
-      })
+    val (written, events) = ingestWithProgress(df, Seq("k", "v"), out)
     assert(written == 4000L)
     assert(events.size >= 2, s"expected >=2 progress events, got $events")
     assert(events.map(_._1) == events.map(_._1).sorted, s"non-monotonic: $events")
     assert(events.last._1 == 4000L, s"final processed != total: $events")
     assert(events.forall(_._2 == 4000L), s"total drifted (reference bug): $events")
-    assert(cb.size == events.size, "callback missed events")
+    // each event reports new rows: processed strictly increases
+    assert(events.map(_._1).distinct.size == events.size, s"repeated event: $events")
     assert(spark.read.parquet(out).count() == 4000L)
+  }
+
+  test("ingest progress over a Parquet source launches no job besides the write") {
+    val src = tmpDir("graft_ingest_pq_src") + "/t"
+    spark.range(0, 3000).toDF("k").withColumn("v", col("k") % 7)
+      .repartition(3).write.parquet(src)
+    val source = spark.read.parquet(src) // schema inference runs its own job
+    val out = tmpDir("graft_ingest_pq") + "/t"
+    val ((written, events), jobs) = TestSpark.jobsLaunchedBy {
+      ingestWithProgress(source, Seq("k", "v"), out)
+    }
+    assert(written == 3000L && events.last == ((3000L, 3000L)), s"$written $events")
+    // total from the footers, so the write is the one job
+    assert(jobs == 1, s"expected the write alone, got $jobs jobs")
+  }
+
+  test("ingest progress keeps the caller's job group") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("graft-caller-group", "caller")
+    try {
+      val out = tmpDir("graft_ingest_group") + "/t"
+      ingestWithProgress(spark.range(0, 100).toDF("k"), Seq("k"), out)
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "graft-caller-group")
+    } finally sc.clearJobGroup()
   }
 
   test("zorder layout: per-file ranges tight on BOTH dimensions") {

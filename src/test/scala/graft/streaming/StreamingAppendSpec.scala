@@ -27,7 +27,7 @@ class StreamingAppendSpec extends AnyFunSuite {
     assert(streamed.nonEmpty)
     assert(streamed == batch,
       s"append drift/batch divergence:\n stream=$streamed\n batch=$batch")
-    val raw = spark.table(qn)
+    val raw = EventStreams.drainSession(spark, noDataBatches = true).table(qn)
       .select(to_date(col("window.start")).as("d"), col("source"), col("b"))
     assert(raw.count() == raw.distinct().count(),
       "append mode re-emitted a closed window")
@@ -63,7 +63,7 @@ class StreamingAppendSpec extends AnyFunSuite {
     assert(streamed.nonEmpty)
     assert(streamed == batch,
       s"append cms/batch divergence:\n stream=$streamed\n batch=$batch")
-    val raw = spark.table(qn)
+    val raw = EventStreams.drainSession(spark, noDataBatches = true).table(qn)
       .select(col("window.start").as("w"), col("j"), col("b"))
     assert(raw.count() == raw.distinct().count(),
       "append mode re-emitted a closed cell")

@@ -18,7 +18,6 @@ class StreamingTrendingSpec extends AnyFunSuite {
 
   private def batchTop3: Seq[(java.sql.Date, Long, String, Long)] = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val events = spark.read.parquet(eventsPath)
       .transform(graft.engine.TsNorm.normalizeTs(_))
     val daily = events
@@ -56,11 +55,12 @@ class StreamingTrendingSpec extends AnyFunSuite {
     assert(streamed == batch,
       s"append streaming/batch divergence:\n stream=${streamed.take(6)}\n batch=${batch.take(6)}")
     // The raw memory-sink emissions (still registered under the query name
-    // after the drain) carry the append contract: a closed (day, type)
-    // window appears EXACTLY once — update-mode would accumulate multiple
-    // emissions per key — and the far-future sentinel day (watermark
-    // closure) is never emitted because nothing ever closes it.
-    val raw = spark.table(qn)
+    // in the drain session after the drain) carry the append contract: a
+    // closed (day, type) window appears EXACTLY once — update-mode would
+    // accumulate multiple emissions per key — and the far-future sentinel
+    // day (watermark closure) is never emitted because nothing ever closes
+    // it.
+    val raw = EventStreams.drainSession(spark, noDataBatches = true).table(qn)
       .select(to_date(col("window.start")).as("d"), col("event_type"))
     assert(raw.count() == raw.distinct().count(),
       "append mode re-emitted a closed window")
