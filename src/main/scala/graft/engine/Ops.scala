@@ -1,8 +1,10 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
 
 /** The reference's relational surface as pure `DataFrame => DataFrame`
   * operators (SURVEY.md §2). Everything here is declarative — Catalyst picks
@@ -26,11 +28,14 @@ object Ops {
     *
     * On a plain Parquet scan ordered by one key whose row groups hold
     * disjoint key ranges (a [[Catalog.table]] written in key order, such as
-    * by [[Sinks.writeSorted]]), [[ParquetFooters.page]] locates the row
-    * groups holding the page from the footers, and the page reads only
-    * those. Every other frame, key or layout sorts the whole frame, and
-    * there an offset past `Int.MaxValue` rows is rejected with an
-    * `IllegalArgumentException`. Both paths give the same rows.
+    * by [[Sinks.writeSorted]]), [[ParquetFooters.page]] locates the run of
+    * row groups holding the page from the footers. A run of at most
+    * [[LocalAnswers.MaxBytes]] is read on the driver and the page is a local
+    * frame: collecting it runs no Spark job. A larger run is read by one job
+    * that skips every other row group. Every other frame, key or layout
+    * sorts the whole frame, and there an offset past `Int.MaxValue` rows is
+    * rejected with an `IllegalArgumentException`. Every path gives the same
+    * rows.
     */
   val DefaultPageSize = 100 // server.js:53
   val MaxPageSize     = 1000 // server.js:54
@@ -51,14 +56,15 @@ object Ops {
     *
     * On a plain Parquet scan ([[ParquetFooters]]) the total is the sum of
     * the footers' row-group row counts, read when this is called, and the
-    * frame is local: collecting it runs no Spark job. Every other frame
-    * (filtered, joined, CSV, partitioned) counts in one Spark job when
+    * frame is local ([[LocalAnswers]]): collecting it runs no Spark job.
+    * Every other frame (filtered, joined, CSV, partitioned, or more than
+    * [[ParquetFooters.MaxFiles]] files) counts in one Spark job when
     * collected. */
   def countTotal(df: DataFrame): DataFrame =
     ParquetFooters.rowCount(df) match {
       case Some(n) =>
-        df.sparkSession.createDataFrame(java.util.List.of(Row(n)),
-          StructType(Seq(StructField("total", LongType, nullable = false))))
+        LocalAnswers.frame(df.sparkSession,
+          Seq(AttributeReference("total", LongType, nullable = false)()), Seq(InternalRow(n)))
       case None => df.agg(count(lit(1)).as("total"))
     }
 

@@ -3,6 +3,7 @@ package graft.engine
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -10,11 +11,13 @@ import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, IntLogicalTypeAnnotation, StringLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, AttributeSet, Descending, Literal, SortOrder}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, sources}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, AttributeSet, Descending, Literal, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort, SubqueryAlias}
-import org.apache.spark.sql.catalyst.types.PhysicalDataType
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.catalyst.types.{DataTypeUtils, PhysicalDataType}
+import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -31,6 +34,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[MaxFiles]] files, and when a footer cannot be read; the caller then
   * takes its general path. Footers are read when the method is called, from
   * the file listing the frame's relation already holds.
+  *
+  * A located page whose run of row groups holds at most
+  * [[LocalAnswers.MaxBytes]] uncompressed bytes is read on the driver, from
+  * only the files that hold the run, and comes back as a local frame: no
+  * Spark job. A larger run is read by one Spark job that skips every other
+  * row group.
   */
 object ParquetFooters {
 
@@ -41,8 +50,8 @@ object ParquetFooters {
   /** The frame's row count: the sum of its row groups' row counts. */
   def rowCount(df: DataFrame): Option[Long] =
     plainScan(df.queryExecution.analyzed)
-      .flatMap { case (rel, _) => footers(rel) }
-      .map(_.iterator.flatMap(_.getBlocks.asScala).map(_.getRowCount).sum)
+      .flatMap(scan => footers(scan.rel))
+      .map(_.iterator.flatMap(_._2.getBlocks.asScala).map(_.getRowCount).sum)
 
   /** Rows `[offset, offset + size)` of `df` ordered by `orderBy`, read from
     * only the row groups that hold them. Applies when the order is one key,
@@ -51,59 +60,93 @@ object ParquetFooters {
     * statistics for it with no nulls; and the groups' `[min, max]` ranges
     * are strictly disjoint. The groups are then totally ordered by the key,
     * so the page lies in a run of consecutive groups, and a key-range filter
-    * over that run (which Parquet row-group pushdown turns into skipped
-    * groups) plus the skip inside the run gives exactly the page the full
-    * sort gives. */
+    * over that run plus the skip inside the run gives exactly the page the
+    * full sort gives.
+    *
+    * When the run fits [[LocalAnswers.MaxBytes]] ([[onDriver]]), the files
+    * that hold it are read on the driver through the relation's own reader,
+    * with the key-range filters; the rows in range are sorted by the key,
+    * skipped and cut to `size`, and stand in for the relation under the
+    * frame's own projections in a local frame. A page past the last row is
+    * an empty local frame. A larger run, or a relation whose output is not
+    * its data columns, is the filtered frame sorted, skipped and limited by
+    * one Spark job, whose row-group pushdown skips the groups outside the
+    * run. */
   def page(df: DataFrame, orderBy: Seq[Column], offset: Long, size: Int): Option[DataFrame] =
+    locatedPage(df, orderBy, offset, size, onDriver)
+
+  /** [[page]] with every located run read by the one-job path, whatever its
+    * size: the path a run over [[LocalAnswers.MaxBytes]] takes. */
+  private[engine] def pageByJob(df: DataFrame, orderBy: Seq[Column], offset: Long, size: Int): Option[DataFrame] =
+    locatedPage(df, orderBy, offset, size, _ => false)
+
+  private def locatedPage(df: DataFrame, orderBy: Seq[Column], offset: Long, size: Int,
+                          driver: Run => Boolean): Option[DataFrame] =
     for {
-      (rel, passed) <- plainScan(df.queryExecution.analyzed)
+      scan <- plainScan(df.queryExecution.analyzed)
       if size > 0
       (key, descending) <- sortKey(df, orderBy)
-      if passed.contains(key)
-      fs <- footers(rel)
+      if scan.passed.contains(key)
+      fs <- footers(scan.rel)
       groups <- keyRanges(fs, key)
       located <- locate(groups, key.dataType, descending, offset, size)
     } yield located match {
-      case None => df.limit(0)
-      case Some((lo, hi, skip)) =>
+      case None => local(df, scan, Nil)
+      case Some(run) if driver(run) && scan.readsData =>
+        local(df, scan, readRun(scan, key, descending, run, size))
+      case Some(run) =>
         val k = GraftSqlBridge.column(key)
-        df.filter(k >= GraftSqlBridge.column(Literal(lo, key.dataType)) &&
-            k <= GraftSqlBridge.column(Literal(hi, key.dataType)))
-          .orderBy(orderBy: _*).offset(skip).limit(size)
+        df.filter(k >= GraftSqlBridge.column(Literal(run.lo, key.dataType)) &&
+            k <= GraftSqlBridge.column(Literal(run.hi, key.dataType)))
+          .orderBy(orderBy: _*).offset(run.skip).limit(size)
     }
 
   /** 1582-10-15: dates from here on read the same in every calendar. */
   private val GregorianCutoverDay = java.time.LocalDate.of(1582, 10, 15).toEpochDay.toInt
 
-  /** One row group's row count and key range, as Catalyst values. */
-  private final case class Group(rows: Long, min: Any, max: Any)
+  /** One row group's row count, key range (as Catalyst values),
+    * uncompressed bytes, and file. */
+  private[engine] final case class Group(rows: Long, min: Any, max: Any, bytes: Long, file: FileStatus)
 
-  /** The relation under a plain Parquet scan, and the relation columns the
-    * scan's projections pass through unchanged. Reads the analyzed plan,
-    * whose aliases and projections the optimizer would only collapse, so a
-    * frame that falls back pays no extra optimizer pass. */
-  private def plainScan(plan: LogicalPlan): Option[(HadoopFsRelation, AttributeSet)] = plan match {
+  /** The consecutive groups that hold a page: their key range `[lo, hi]`,
+    * the rows to skip inside it, their bytes and their files. */
+  private[engine] final case class Run(lo: Any, hi: Any, skip: Int, bytes: Long, files: Seq[FileStatus])
+
+  /** Whether a located run is read on the driver rather than by a job. */
+  private[engine] def onDriver(run: Run): Boolean = run.bytes <= LocalAnswers.MaxBytes
+
+  /** A plain Parquet scan: its relation leaf, the relation, and the relation
+    * columns its projections pass through unchanged. */
+  private final case class Scan(leaf: LogicalRelation, rel: HadoopFsRelation, passed: AttributeSet) {
+    /** The leaf outputs exactly the data columns (no metadata columns), the
+      * rows the relation's reader returns. */
+    def readsData: Boolean = leaf.output.map(_.name) == rel.dataSchema.fieldNames.toSeq
+  }
+
+  /** The plain Parquet scan under `plan`. Reads the analyzed plan, whose
+    * aliases and projections the optimizer would only collapse, so a frame
+    * that falls back pays no extra optimizer pass. */
+  private def plainScan(plan: LogicalPlan): Option[Scan] = plan match {
     case SubqueryAlias(_, child) => plainScan(child)
     case Project(list, child) =>
-      plainScan(child).map { case (rel, passed) =>
-        rel -> AttributeSet(list.collect { case a: AttributeReference if passed.contains(a) => a })
-      }
-    case LogicalRelation(rel: HadoopFsRelation, output, _, false, _)
+      plainScan(child).map(scan => scan.copy(passed =
+        AttributeSet(list.collect { case a: AttributeReference if scan.passed.contains(a) => a })))
+    case leaf @ LogicalRelation(rel: HadoopFsRelation, output, _, false, _)
         if rel.fileFormat.isInstanceOf[ParquetFileFormat] &&
           rel.partitionSchema.isEmpty && rel.bucketSpec.isEmpty =>
-      Some(rel -> AttributeSet(output))
+      Some(Scan(leaf, rel, AttributeSet(output)))
     case _ => None
   }
 
-  /** The footers of the relation's files, or None past [[MaxFiles]] files
-    * or when one cannot be read. */
-  private def footers(rel: HadoopFsRelation): Option[Seq[ParquetMetadata]] = Try {
-    val files = rel.location.listFiles(Nil, Nil).flatMap(_.files)
+  /** Each of the relation's files with its footer, or None past
+    * [[MaxFiles]] files or when a footer cannot be read. */
+  private def footers(rel: HadoopFsRelation): Option[Seq[(FileStatus, ParquetMetadata)]] = Try {
+    val files = rel.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus)
     if (files.size > MaxFiles) None
     else {
       val conf = rel.sparkSession.sessionState.newHadoopConfWithOptions(rel.options)
-      Some(files.map(f => ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(f.fileStatus, conf), ParquetMetadataConverter.NO_FILTER)))
+      Some(files.map(f => f -> ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.NO_FILTER)))
     }
   }.toOption.flatten
 
@@ -119,20 +162,21 @@ object ParquetFooters {
   /** Every non-empty row group's key range, or None when one lacks complete
     * non-null statistics for the key or stores it in a layout whose order is
     * not Spark's order of the key's type. */
-  private def keyRanges(fs: Seq[ParquetMetadata], key: AttributeReference): Option[Seq[Group]] = {
-    val groups = fs.iterator.flatMap(_.getBlocks.asScala).filter(_.getRowCount > 0).map { block =>
-      for {
-        chunk <- block.getColumns.asScala.find(_.getPath.toArray.sameElements(Array(key.name)))
-        decode <- decoder(key.dataType, chunk.getPrimitiveType)
-        stats = chunk.getStatistics
-        if stats != null && !stats.isEmpty && stats.hasNonNullValue &&
-          stats.isNumNullsSet && stats.getNumNulls == 0
-        min = decode(stats.genericGetMin)
-        // Spark may rebase older dates between calendars on read, which the
-        // stored statistics do not show.
-        if key.dataType != DateType || min.asInstanceOf[Int] >= GregorianCutoverDay
-      } yield Group(block.getRowCount, min, decode(stats.genericGetMax))
-    }.toSeq
+  private def keyRanges(fs: Seq[(FileStatus, ParquetMetadata)], key: AttributeReference): Option[Seq[Group]] = {
+    val groups = fs.iterator.flatMap { case (file, f) => f.getBlocks.asScala.map(file -> _) }
+      .filter(_._2.getRowCount > 0).map { case (file, block) =>
+        for {
+          chunk <- block.getColumns.asScala.find(_.getPath.toArray.sameElements(Array(key.name)))
+          decode <- decoder(key.dataType, chunk.getPrimitiveType)
+          stats = chunk.getStatistics
+          if stats != null && !stats.isEmpty && stats.hasNonNullValue &&
+            stats.isNumNullsSet && stats.getNumNulls == 0
+          min = decode(stats.genericGetMin)
+          // Spark may rebase older dates between calendars on read, which the
+          // stored statistics do not show.
+          if key.dataType != DateType || min.asInstanceOf[Int] >= GregorianCutoverDay
+        } yield Group(block.getRowCount, min, decode(stats.genericGetMax), block.getTotalByteSize, file)
+      }.toSeq
     if (groups.forall(_.isDefined)) Some(groups.flatten) else None
   }
 
@@ -162,10 +206,10 @@ object ParquetFooters {
 
   /** Locates rows `[offset, offset + size)` among key-disjoint groups.
     * Returns None when two groups' ranges touch or overlap, Some(None) when
-    * the page lies past the last row, and otherwise the key range of the
-    * run of groups holding the page and the rows to skip inside it. */
-  private def locate(groups: Seq[Group], dt: DataType, descending: Boolean,
-                     offset: Long, size: Int): Option[Option[(Any, Any, Int)]] = {
+    * the page lies past the last row, and otherwise the run of groups
+    * holding the page. */
+  private[engine] def locate(groups: Seq[Group], dt: DataType, descending: Boolean,
+                             offset: Long, size: Int): Option[Option[Run]] = {
     val ord = PhysicalDataType.ordering(dt)
     val byMin = groups.sortBy(_.min)(ord)
     val disjoint = byMin.zip(byMin.drop(1)).forall { case (a, b) => ord.lt(a.max, b.min) }
@@ -181,8 +225,43 @@ object ParquetFooters {
         val run = inOrder.slice(first, last + 1)
         val skip = offset - starts(first)
         if (skip > Int.MaxValue) None
-        else Some(Some((run.map(_.min).min(ord), run.map(_.max).max(ord), skip.toInt)))
+        else Some(Some(Run(run.map(_.min).min(ord), run.map(_.max).max(ord), skip.toInt,
+          run.map(_.bytes).sum, run.map(_.file).distinct)))
       }
     }
   }
+
+  /** The page's rows, read on the driver from the files that hold `run`
+    * through the relation's own reader. The key-range filters let the reader
+    * skip the files' other row groups; the rows kept are those in
+    * `[run.lo, run.hi]`, the rows of the run. */
+  private def readRun(scan: Scan, key: AttributeReference, descending: Boolean,
+                      run: Run, size: Int): Seq[InternalRow] = {
+    val rel = scan.rel
+    val spark = rel.sparkSession
+    val schema = DataTypeUtils.fromAttributes(scan.leaf.output)
+    val at = scan.leaf.output.indexWhere(_.exprId == key.exprId)
+    val dt = key.dataType
+    val ord = PhysicalDataType.ordering(dt)
+    def bound(v: Any): Any = CatalystTypeConverters.convertToScala(v, dt)
+    val read = rel.fileFormat.buildReaderWithPartitionValues(spark, rel.dataSchema, new StructType(), schema,
+      Seq(sources.GreaterThanOrEqual(key.name, bound(run.lo)), sources.LessThanOrEqual(key.name, bound(run.hi))),
+      rel.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConfWithOptions(rel.options))
+    val toUnsafe = UnsafeProjection.create(schema)
+    val rows = run.files.flatMap { f =>
+      read(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(f), 0, f.getLen, Array.empty,
+          f.getModificationTime, f.getLen))
+        .map(toUnsafe)
+        .filter { r => val k = r.get(at, dt); ord.gteq(k, run.lo) && ord.lteq(k, run.hi) }
+        .map(_.copy())
+    }
+    rows.sorted(Ordering.by[InternalRow, Any](_.get(at, dt))(if (descending) ord.reverse else ord))
+      .slice(run.skip, run.skip + size)
+  }
+
+  /** `df` with `rows` in place of its relation, under its own projections. */
+  private def local(df: DataFrame, scan: Scan, rows: Seq[InternalRow]): DataFrame =
+    LocalAnswers.frame(df.sparkSession, scan.leaf.output, rows,
+      leaf => df.queryExecution.analyzed.transformUp { case l: LogicalRelation if l eq scan.leaf => leaf })
 }

@@ -1,12 +1,17 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, Literal, Round}
+import org.apache.spark.sql.catalyst.types.{DataTypeUtils, PhysicalDataType}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructType}
+import graft.engine.LocalAnswers
 
 /** Similarity search over embedding columns (`Array[Float]`) — SURVEY.md
   * §2.12 Y3 and the north-star mandate.
   *
-  * Two tiers:
+  * Three tiers:
   *  - [[bruteForceTopK]]: exact cosine top-k against a query vector. One scan,
   *    per-row fold for the dot product, `TakeOrderedAndProject` for the top-k
   *    (per-partition heaps, no full sort). The 100 TB cost is one pass over
@@ -15,6 +20,15 @@ import org.apache.spark.sql.functions._
   *    bucketed by a 16-bit sign signature; search touches only matching
   *    buckets (optionally multi-probed at Hamming distance 1). Candidate
   *    generation is an equality join on the bucket key — never a cross join.
+  *  - [[ivfTopK]]: IVF, `bruteForceTopK`'s rule over the `nProbe` lists
+  *    nearest the query, on an index fitted once per corpus and kept in the
+  *    session ([[ivfFitted]]). When the index holds at most
+  *    [[graft.engine.LocalAnswers.MaxBytes]] of vectors with scoreable ids
+  *    and vectors, the lists are also kept on the driver and a probe is
+  *    scored there and returned as a local frame, with no Spark job; any
+  *    other index or query is answered by one job over the cached index.
+  *    [[writeIvfIndex]] / [[ivfTopKFromIndex]] persist the index for a
+  *    corpus too large for either.
   *
   * All arithmetic is double-precision with left-to-right folds so results are
   * deterministic and reproducible across engines.
@@ -39,11 +53,14 @@ object Similarity {
 
   private def litVector(v: Seq[Double]): Column = array(v.map(lit): _*)
 
+  /** The places a top-k's `sim` is rounded to. */
+  private val SimDecimals = 4
+
   /** Exact top-k by cosine against a constant query vector. Output:
     * (id, sim) — sim rounded to kill last-bit drift, ties broken by id. */
   def bruteForceTopK(df: DataFrame, idCol: String, vecCol: String,
                      query: Seq[Double], k: Int,
-                     simDecimals: Int = 4): DataFrame =
+                     simDecimals: Int = SimDecimals): DataFrame =
     df.select(col(idCol).as("vec_id"),
         round(cosine(col(vecCol), litVector(query)), simDecimals).as("sim"))
       .orderBy(col("sim").desc, col("vec_id"))
@@ -308,43 +325,168 @@ object Similarity {
       idCol, vecCol, query, k)
   }
 
-  private val ivfMemo =
-    new SessionMemo[(DataFrame, Array[Array[Double]])](_._1.unpersist(blocking = false))
+  /** A fitted IVF index as the memo keeps it: the cached assigned frame,
+    * its centroids, and its lists on the driver when [[driverLists]] kept
+    * them. Releasing the fit (LRU eviction, `refit`, a lost build race)
+    * unpersists the frame and drops the lists. */
+  private[llm] final class IvfFit(val indexed: DataFrame, val centers: Array[Array[Double]],
+                                  keep: Option[IvfLists]) {
+    @volatile private var kept = keep
+    def lists: Option[IvfLists] = kept
+    def release(): Unit = { kept = None; indexed.unpersist(blocking = false) }
+  }
+
+  /** An index's lists on the driver: per list, its ids and its vectors as
+    * `array<double>` with their norms; every vector is `dim` long, and
+    * `schema` is [[bruteForceTopK]]'s output schema over the index. */
+  private[llm] final class IvfLists(ids: Array[Array[Long]], vecs: Array[Array[Array[Double]]],
+                                    norms: Array[Array[Double]], dim: Int, val schema: StructType) {
+    private val intIds = schema.head.dataType == IntegerType
+
+    /** [[bruteForceTopK]]`(lists probes, query, k, simDecimals)`, computed
+      * by its rule: `dot / (sqrt(dot(v, v)) * sqrt(dot(q, q)))` with
+      * left-to-right dot folds, Spark's own `round`, `sim` descending under
+      * Spark's double order, ties to the lower id. None when the query is
+      * not `dim` long, `k` is negative, or a denominator is 0: those take
+      * the job path. */
+    def topK(query: Seq[Double], probes: Seq[Int], k: Int, simDecimals: Int): Option[Seq[InternalRow]] = {
+      val q = query.toArray
+      val qn = math.sqrt(dotOf(q, q))
+      val rows = probes.flatMap(p => ids(p).indices.map(p -> _))
+      if (q.length != dim || k < 0 || rows.exists { case (p, i) => norms(p)(i) * qn == 0 }) None
+      else {
+        val round = Round(BoundReference(0, DoubleType, nullable = false), Literal(simDecimals))
+        val arg = new GenericInternalRow(1)
+        val simOrd = PhysicalDataType.ordering(DoubleType)
+        Some(rows.map { case (p, i) =>
+          arg.update(0, dotOf(vecs(p)(i), q) / (norms(p)(i) * qn))
+          (round.eval(arg).asInstanceOf[Double], ids(p)(i))
+        }.sorted(Ordering.fromLessThan[(Double, Long)] { (a, b) =>
+          val c = simOrd.compare(b._1, a._1)
+          c < 0 || (c == 0 && a._2 < b._2)
+        }).take(k).map { case (sim, id) => InternalRow(if (intIds) id.toInt else id, sim) })
+      }
+    }
+  }
+
+  /** DotProduct's fold: index order, over the shorter length. */
+  private def dotOf(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  /** The index's lists, collected to the driver when one aggregate over
+    * the cached index shows they fit [[LocalAnswers.MaxBytes]] (rows × dim
+    * × 8 bytes) and every row is scoreable there: a non-null long or int id,
+    * and a non-null vector, free of null elements, of one common length and
+    * of non-zero norm, in a list of the index. None otherwise. */
+  private def driverLists(indexed: DataFrame, idCol: String, vecCol: String,
+                          nLists: Int): Option[IvfLists] =
+    indexed.schema(idCol).dataType match {
+      case LongType | IntegerType =>
+        val v = col(vecCol).cast("array<double>")
+        val list = col("ivf_cluster")
+        val scoreable = col(idCol).isNotNull && v.isNotNull && !exists(v, _.isNull) &&
+          dot(v, v) =!= 0 && list.between(0, nLists - 1)
+        val facts = indexed.agg(bool_and(scoreable), count(lit(1)), min(size(v)), max(size(v))).head()
+        val fits = !facts.isNullAt(0) && facts.getBoolean(0) && facts.getInt(2) == facts.getInt(3) &&
+          facts.getLong(1) * facts.getInt(3) * 8 <= LocalAnswers.MaxBytes
+        Option.when(fits) {
+          val spark = indexed.sparkSession
+          import spark.implicits._
+          val dim = facts.getInt(3)
+          val byList = indexed.select(col(idCol).cast("long"), v, list)
+            .as[(Long, Array[Double], Int)].collect().groupBy(_._3).withDefaultValue(Array.empty)
+          def lists[T: scala.reflect.ClassTag](f: ((Long, Array[Double], Int)) => T) =
+            Array.tabulate(nLists)(l => byList(l).map(f))
+          new IvfLists(lists(_._1), lists(_._2), lists(r => math.sqrt(dotOf(r._2, r._2))), dim,
+            bruteForceTopK(indexed, idCol, vecCol, Seq.fill(dim)(0.0), 1).schema)
+        }
+      case _ => None
+    }
+
+  private val ivfMemo = new SessionMemo[IvfFit](_.release())
+
+  /** The memo entry behind [[ivfFitted]] and [[ivfTopK]]. */
+  private[llm] def ivfFit(df: DataFrame, vecCol: String, nLists: Int, seed: Long,
+                          refit: Boolean, idCol: String): IvfFit = {
+    if (refit) ivfMemo.invalidate(df, vecCol, nLists, seed, idCol)
+    ivfMemo.getOrBuild(df, vecCol, nLists, seed, idCol) {
+      val (ix, cs) = ivfIndex(df, vecCol, nLists, seed, idCol)
+      val indexed = ix.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      new IvfFit(indexed, cs, driverLists(indexed, idCol, vecCol, cs.length))
+    }
+  }
 
   /** The memoized IVF fit behind [[ivfTopK]] — public so batched callers
     * (a multi-query evaluation panel) share the same cached index instead
     * of refitting per call. The assigned table is kept MEMORY_AND_DISK so
-    * repeat probes skip the scan+assign too; an evicted or refit entry is
-    * unpersisted. This is the in-memory analog of writeIvfIndex →
-    * ivfTopKFromIndex (the durable path a 100 TB corpus uses instead). */
+    * repeat probes skip the scan+assign too. A fit also runs one aggregate
+    * over that table, and when the index fits
+    * [[graft.engine.LocalAnswers.MaxBytes]] (rows × dim × 8 bytes) with ids
+    * and vectors [[ivfTopK]] can score on the driver, collects its lists
+    * once into the entry. The memo keeps at most `SessionMemo.MaxEntries`
+    * fits; an evicted or refit entry is unpersisted and its lists dropped.
+    * This is the in-memory analog of writeIvfIndex → ivfTopKFromIndex (the
+    * durable path a 100 TB corpus uses instead). */
   def ivfFitted(df: DataFrame, vecCol: String, nLists: Int,
                 seed: Long = 42L, refit: Boolean = false,
                 idCol: String = "vec_id"): (DataFrame, Array[Array[Double]]) = {
-    if (refit) ivfMemo.invalidate(df, vecCol, nLists, seed, idCol)
-    ivfMemo.getOrBuild(df, vecCol, nLists, seed, idCol) {
-      val (ix, cs) = ivfIndex(df, vecCol, nLists, seed, idCol)
-      (ix.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), cs)
-    }
+    val fit = ivfFit(df, vecCol, nLists, seed, refit, idCol)
+    (fit.indexed, fit.centers)
   }
 
   /** ANN top-k via IVF: pick the `nProbe` lists whose centroids are nearest
-    * the query (driver-side math over nLists centroids), then brute-force
-    * cosine over the rows of those lists. The list filter runs over the whole
-    * cached index, so every call still scans the full corpus; only the
-    * scoring work shrinks to ∝ nProbe/nLists. The persisted layout of
-    * [[writeIvfIndex]] is what prunes the scan itself. The recall knob is
-    * nProbe; nProbe = nLists degrades to exact brute force. The fitted index
-    * is memoized per (session, input, params); pass `refit = true` to force a
-    * rebuild (e.g. after the corpus changed behind an identical plan). */
+    * the query (driver-side math over nLists centroids), then
+    * [[bruteForceTopK]] over the rows of those lists, with its exact schema
+    * and rows.
+    *
+    * When [[ivfFitted]] kept the lists on the driver (an index of at most
+    * [[graft.engine.LocalAnswers.MaxBytes]] whose ids are non-null longs or
+    * ints and whose vectors are non-null, free of null elements, of one
+    * length and of non-zero norm), a query of that length is scored there
+    * over only the probed lists, and the answer is a local frame: no Spark
+    * job. Any other index or query (a length mismatch, or a zero cosine
+    * denominator) takes the job path: the list filter over the whole cached
+    * index, which scans the full corpus and scores ∝ nProbe/nLists of it.
+    * The persisted layout of [[writeIvfIndex]] is what prunes that scan. The
+    * recall knob is nProbe; nProbe = nLists degrades to exact brute force.
+    * The fitted index is memoized per (session, input, params); pass
+    * `refit = true` to force a rebuild (e.g. after the corpus changed behind
+    * an identical plan). */
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
               query: Seq[Double], k: Int, nLists: Int = 16, nProbe: Int = 4,
               seed: Long = 42L, refit: Boolean = false): DataFrame = {
-    val (indexed, centers) = ivfFitted(df, vecCol, nLists, seed, refit, idCol)
-    val probes = nearestCentroids(
-      centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq, query, nProbe)
-    bruteForceTopK(indexed.filter(col("ivf_cluster").isin(probes: _*)),
-      idCol, vecCol, query, k)
+    val (fit, probes) = ivfProbes(df, idCol, vecCol, query, nLists, nProbe, seed, refit)
+    fit.lists.flatMap(l => l.topK(query, probes, k, SimDecimals).map(rows =>
+        LocalAnswers.frame(df.sparkSession, DataTypeUtils.toAttributes(l.schema), rows)))
+      .getOrElse(probedByJob(fit, probes, idCol, vecCol, query, k))
   }
+
+  /** [[ivfTopK]] answered by its job path, whatever the index: the path an
+    * index or query the driver cannot score takes. */
+  private[graft] def ivfTopKByJob(df: DataFrame, idCol: String, vecCol: String,
+                                  query: Seq[Double], k: Int, nLists: Int = 16, nProbe: Int = 4,
+                                  seed: Long = 42L): DataFrame = {
+    val (fit, probes) = ivfProbes(df, idCol, vecCol, query, nLists, nProbe, seed, refit = false)
+    probedByJob(fit, probes, idCol, vecCol, query, k)
+  }
+
+  /** The fitted index and the `nProbe` lists whose centroids are nearest
+    * the query. */
+  private def ivfProbes(df: DataFrame, idCol: String, vecCol: String, query: Seq[Double],
+                        nLists: Int, nProbe: Int, seed: Long, refit: Boolean): (IvfFit, Seq[Int]) = {
+    val fit = ivfFit(df, vecCol, nLists, seed, refit, idCol)
+    (fit, nearestCentroids(fit.centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq, query, nProbe))
+  }
+
+  /** [[bruteForceTopK]] over the probed lists of the cached index. */
+  private def probedByJob(fit: IvfFit, probes: Seq[Int], idCol: String, vecCol: String,
+                          query: Seq[Double], k: Int): DataFrame =
+    bruteForceTopK(fit.indexed.filter(col("ivf_cluster").isin(probes: _*)), idCol, vecCol, query, k)
 
   /** Per-vector int8 scalar quantization: min-max scale each embedding to
     * [-128, 127]. 4× smaller vectors for the candidate-generation stages of

@@ -44,8 +44,12 @@ object OpsProps extends Properties("graft.engine") {
           Ops.page(df, order, p, size).collect().toSeq ==
             df.orderBy(order: _*).offset((p - 1) * size).limit(size).collect().toSeq
         }
+        // Every page the footers locate is read on the driver: these layouts
+        // are far under LocalAnswers.MaxBytes.
+        val located = (1 to n / size + 1).filter(p => ParquetFooters.page(df, order, (p - 1) * size, size).isDefined)
+        val (_, locatedJobs) = TestSpark.jobsLaunchedBy(located.foreach(p => Ops.page(df, order, p, size).collect()))
         Ops.countTotal(df).head().getLong(0) == df.count() && pagesEqual &&
-          (!sorted || nulls || ParquetFooters.page(df, order, 0, size).isDefined)
+          (!sorted || nulls || ParquetFooters.page(df, order, 0, size).isDefined) && locatedJobs == 0
     }
 
   property("dedupKeepFirst: output keys unique, idempotent, subset of input") =

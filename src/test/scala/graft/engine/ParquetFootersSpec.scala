@@ -2,11 +2,12 @@ package graft.engine
 
 import java.nio.file.Files
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.TestSpark.jobsLaunchedBy
@@ -85,6 +86,33 @@ class ParquetFootersSpec extends AnyFunSuite {
     assertSameAsScan(df, Seq(col("event_id")), 128, footers = true)
     // ts is the normalized column, not the stored one: the full sort answers.
     assertSameAsScan(df, Seq(col("ts"), col("event_id")), 400, footers = false)
+    // A page read on the driver: the stored ts goes through the same TsNorm
+    // projection as in the plain read.
+    assert(df.schema("ts").dataType == TimestampType)
+    for (p <- Seq(1, 2, (total.head.getLong(0) / 128 + 1).toInt)) {
+      val (got, jobs) = jobsLaunchedBy(Ops.page(df, Seq(col("event_id")), p, 128).select("event_id", "ts").collect())
+      assert(jobs == 0, s"page $p")
+      assert(got.exists(!_.isNullAt(1)), s"page $p")
+      assert(got.toSeq == df.orderBy("event_id").offset((p - 1) * 128).limit(128)
+        .select("event_id", "ts").collect().toSeq, s"page $p")
+    }
+  }
+
+  test("a run over LocalAnswers.MaxBytes is read by the job path") {
+    val half = LocalAnswers.MaxBytes / 2 + 1
+    val Seq(a, b) = Seq("a", "b").map(f => new FileStatus(half, false, 1, half, 0, new Path(s"/t/$f.parquet")))
+    val groups = Seq(ParquetFooters.Group(100, 0L, 99L, half, a), ParquetFooters.Group(100, 100L, 199L, half, b))
+    def run(offset: Long, desc: Boolean = false) =
+      ParquetFooters.locate(groups, LongType, desc, offset, 50).flatten.get
+    val inA = run(10)
+    assert(inA.files == Seq(a) && inA.bytes == half && ParquetFooters.onDriver(inA))
+    val across = run(80)
+    assert(across.files == Seq(a, b) && across.bytes == 2 * half && !ParquetFooters.onDriver(across))
+    assert(run(80, desc = true).files == Seq(b, a) && !ParquetFooters.onDriver(run(80, desc = true)))
+    val atBound = ParquetFooters.Group(10, 0L, 9L, LocalAnswers.MaxBytes, a)
+    assert(ParquetFooters.onDriver(ParquetFooters.locate(Seq(atBound), LongType, false, 0, 5).flatten.get))
+    val overBound = atBound.copy(bytes = LocalAnswers.MaxBytes + 1)
+    assert(!ParquetFooters.onDriver(ParquetFooters.locate(Seq(overBound), LongType, false, 0, 5).flatten.get))
   }
 
   test("empty table: count 0 with 0 jobs, every page empty") {

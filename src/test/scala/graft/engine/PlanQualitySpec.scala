@@ -177,7 +177,12 @@ class PlanQualitySpec extends AnyFunSuite {
     // membership filter (nProbe/nLists of the corpus), never rank the
     // whole index, and the top-k must be TakeOrderedAndProject, not a
     // global sort.
-    val df = graft.SparkEntry.queries("q_ann_ivf")(spark, cat.dir)
+    // q_ann_ivf's probe, by the job path (its small index is otherwise
+    // scored on the driver, with no scan at all).
+    val q = cat.embeddings.filter(col("vec_id") === 0)
+      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
+    val df = graft.llm.Similarity.ivfTopKByJob(cat.embeddings, "vec_id", "embedding", q, 10,
+      nLists = 8, nProbe = 3)
     val plan = executed(df)
     val filterLines = plan.linesIterator
       .filter(l => l.contains("Filter") && l.contains("ivf_cluster")).toSeq
@@ -1278,7 +1283,9 @@ class PlanQualitySpec extends AnyFunSuite {
     Sinks.writeSorted(spark.range(0, 20000).select(col("id").as("k"), (col("id") * 3).as("v")),
       s"$dir/t.parquet", Seq("k"), numFiles = Some(4))
     val df = new Catalog(spark, dir).table("t")
-    val page = Ops.page(df, Seq(col("k")), 180, 100)
+    // Page 180 of size 100 by the job path a run over LocalAnswers.MaxBytes
+    // takes (this run is read on the driver otherwise).
+    val page = ParquetFooters.pageByJob(df, Seq(col("k")), 17900, 100).get
     val scan = executed(page).linesIterator.find(_.contains("PushedFilters:")).getOrElse("")
     assert(scan.contains("GreaterThanOrEqual(k,") && scan.contains("LessThanOrEqual(k,"),
       s"the page scans without its key range:\n$scan")

@@ -1,5 +1,7 @@
 package graft.llm
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import graft.TestSpark
 
@@ -59,5 +61,46 @@ object SimilarityProps extends Properties("graft.llm.similarity") {
           math.abs(d2(centers(c)) - d2(centers(expect(id)))) < 1e-9
         }
       }
+    }
+
+  /** A small corpus drawn partly from a pool of 3 vectors, so duplicated
+    * vectors (and tied sims) are common; the query is drawn the same way.
+    * Components are never 0, so every norm is non-zero. */
+  private final case class Probe(vs: List[List[Double]], query: List[Double], k: Int,
+                                 nLists: Int, nProbe: Int, floats: Boolean, intIds: Boolean)
+
+  private val probeGen: Gen[Probe] = for {
+    d <- Gen.chooseNum(2, 4)
+    fresh = Gen.listOfN(d, Gen.chooseNum(-3, 3).map(_.toDouble + 0.25))
+    pool <- Gen.listOfN(3, fresh)
+    drawn = Gen.oneOf(Gen.oneOf(pool), fresh)
+    n <- Gen.chooseNum(6, 20)
+    vs <- Gen.listOfN(n, drawn)
+    query <- drawn
+    k <- Gen.chooseNum(1, 8)
+    nLists <- Gen.chooseNum(2, 3)
+    nProbe <- Gen.chooseNum(1, nLists)
+    floats <- Gen.oneOf(true, false)
+    intIds <- Gen.oneOf(true, false)
+  } yield Probe(vs, query, k, nLists, nProbe, floats, intIds)
+
+  property("ivfTopK's driver answer == bruteForceTopK over the probed lists of the cached index") =
+    Prop.forAll(probeGen) { c =>
+      val df: DataFrame = (c.floats, c.intIds) match {
+        case (true, true) => c.vs.zipWithIndex.map { case (v, i) => (i, v.map(_.toFloat)) }.toDF("id", "vec")
+        case (true, false) => c.vs.zipWithIndex.map { case (v, i) => (i.toLong, v.map(_.toFloat)) }.toDF("id", "vec")
+        case (false, true) => c.vs.zipWithIndex.map { case (v, i) => (i, v) }.toDF("id", "vec")
+        case (false, false) => c.vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "vec")
+      }
+      val fit = Similarity.ivfFit(df, "vec", c.nLists, seed = 42L, refit = false, idCol = "id")
+      val probes = Similarity.nearestCentroids(
+        fit.centers.zipWithIndex.map { case (ctr, i) => (i, ctr.toSeq) }.toSeq, c.query, c.nProbe)
+      val ((schema, rows), jobs) = TestSpark.jobsLaunchedBy {
+        val top = Similarity.ivfTopK(df, "id", "vec", c.query, c.k, c.nLists, c.nProbe)
+        (top.schema, top.collect().toSeq)
+      }
+      val viaJob = Similarity.bruteForceTopK(fit.indexed.filter(col("ivf_cluster").isin(probes: _*)),
+        "id", "vec", c.query, c.k)
+      fit.lists.isDefined && jobs == 0 && schema == viaJob.schema && rows == viaJob.collect().toSeq
     }
 }

@@ -1,8 +1,12 @@
 package graft.llm
 
+import scala.util.Try
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.TestSpark.jobsLaunchedBy
 
 /** Similarity / ANN surface (SURVEY.md §2.12 Y3): exact kernels vs
   * hand-computed values, LSH recall on planted duplicates. */
@@ -140,6 +144,92 @@ class SimilaritySpec extends AnyFunSuite {
     val exact = Similarity.bruteForceTopK(df, "vec_id", "embedding", q, 5)
       .as[(Long, Double)].collect().toSeq
     assert(full == exact)
+  }
+
+  /** The job path's answer for `ivfTopK(df, "vec_id", "embedding", q, k,
+    * nLists, nProbe)`: bruteForceTopK over the probed lists of the cached
+    * index. */
+  private def viaJob(df: DataFrame, q: Seq[Double], k: Int, nLists: Int, nProbe: Int): Seq[Row] = {
+    val fit = Similarity.ivfFit(df, "embedding", nLists, 42L, refit = false, "vec_id")
+    val probes = Similarity.nearestCentroids(
+      fit.centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq, q, nProbe)
+    Similarity.bruteForceTopK(fit.indexed.filter(col("ivf_cluster").isin(probes: _*)),
+      "vec_id", "embedding", q, k).collect().toSeq
+  }
+
+  test("ivfTopK on the driver: a warm probe runs 0 jobs and equals the job path") {
+    val data = corpus(300, 16, seed = 11L)
+    val df = data.toDF("vec_id", "embedding")
+    Similarity.ivfFitted(df, "embedding", nLists = 8)
+    assert(Similarity.ivfFit(df, "embedding", 8, 42L, refit = false, "vec_id").lists.isDefined)
+    for (i <- Seq(0, 17, 123)) {
+      val q = data(i)._2.toSeq
+      val (rows, jobs) = jobsLaunchedBy(
+        Similarity.ivfTopK(df, "vec_id", "embedding", q, 10, nLists = 8, nProbe = 3).collect().toSeq)
+      assert(jobs == 0, s"query $i")
+      assert(rows == viaJob(df, q, 10, 8, 3), s"query $i")
+    }
+  }
+
+  test("ivfTopK: a null vector, a zero-norm vector, a string id or a length mismatch takes the job path") {
+    val data = corpus(40, 4, seed = 5L)
+    val q = data(3)._2.toSeq
+    val rows = data.map { case (i, v) => (i, Option(v)) }
+    val corpora = Seq(
+      "null vector" -> rows.updated(30, (30L, None)).toDF("vec_id", "embedding"),
+      "zero-norm vector" -> rows.updated(30, (30L, Some(Array.fill(4)(0.0)))).toDF("vec_id", "embedding"),
+      "string id" -> data.map { case (i, v) => (s"id$i", v) }.toDF("vec_id", "embedding"))
+    for ((what, df) <- corpora) {
+      Similarity.ivfFitted(df, "embedding", nLists = 4)
+      assert(Similarity.ivfFit(df, "embedding", 4, 42L, refit = false, "vec_id").lists.isEmpty, what)
+      // A zero-norm vector's cosine divides by zero, which the job path
+      // rejects under ANSI; both paths must then fail alike.
+      val (got, jobs) = jobsLaunchedBy(Try(
+        Similarity.ivfTopK(df, "vec_id", "embedding", q, 5, nLists = 4, nProbe = 4).collect().toSeq))
+      assert(jobs > 0, what)
+      assert(got.toOption == Try(viaJob(df, q, 5, 4, 4)).toOption, what)
+    }
+    val df = data.toDF("vec_id", "embedding")
+    Similarity.ivfFitted(df, "embedding", nLists = 4)
+    assert(Similarity.ivfFit(df, "embedding", 4, 42L, refit = false, "vec_id").lists.isDefined)
+    for (query <- Seq(q :+ 1.0, q.take(3))) {
+      val (got, jobs) = jobsLaunchedBy(
+        Similarity.ivfTopK(df, "vec_id", "embedding", query, 5, nLists = 4, nProbe = 2).collect().toSeq)
+      assert(jobs > 0, s"query of length ${query.length}")
+      assert(got == viaJob(df, query, 5, 4, 2), s"query of length ${query.length}")
+    }
+  }
+
+  test("ivfTopK(refit = true) on a rewritten corpus answers from the new vectors") {
+    val path = java.nio.file.Files.createTempDirectory("graft_ivf_refit").toString + "/v.parquet"
+    val before = corpus(60, 8, seed = 1L)
+    val after = corpus(60, 8, seed = 2L)
+    val q = after(9)._2.toSeq
+    before.toDF("vec_id", "embedding").write.parquet(path)
+    val stale = Similarity.ivfTopK(spark.read.parquet(path), "vec_id", "embedding", q, 5,
+      nLists = 4, nProbe = 4).collect().toSeq
+    after.toDF("vec_id", "embedding").write.mode("overwrite").parquet(path)
+    val df = spark.read.parquet(path)
+    val fresh = Similarity.ivfTopK(df, "vec_id", "embedding", q, 5, nLists = 4, nProbe = 4, refit = true)
+      .collect().toSeq
+    assert(Similarity.ivfFit(df, "embedding", 4, 42L, refit = false, "vec_id").lists.isDefined)
+    assert(fresh == Similarity.bruteForceTopK(df, "vec_id", "embedding", q, 5).collect().toSeq)
+    assert(fresh != stale)
+  }
+
+  test("ivfFitted: an evicted or refit entry drops its driver lists") {
+    def small(tag: Int) = Seq((0L, Array(1.0, tag.toDouble)), (1L, Array(tag.toDouble, 1.0)),
+      (2L, Array(2.0, 1.0 + tag))).toDF("vec_id", "embedding")
+    def fitOf(df: DataFrame) = Similarity.ivfFit(df, "embedding", 2, 42L, refit = false, "vec_id")
+    val refitted = small(100)
+    val old = fitOf(refitted)
+    assert(old.lists.isDefined)
+    Similarity.ivfFitted(refitted, "embedding", nLists = 2, refit = true)
+    assert(old.lists.isEmpty && fitOf(refitted).lists.isDefined)
+    val victim = fitOf(small(200))
+    assert(victim.lists.isDefined)
+    (1 to SessionMemo.MaxEntries).foreach(i => fitOf(small(200 + i)))
+    assert(victim.lists.isEmpty)
   }
 
   test("ivfIndex assigns every vector to one of nLists clusters") {
