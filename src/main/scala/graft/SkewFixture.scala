@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Catalog, Ops}
+import graft.engine.Ops
+import SparkEntry.cat
 
 /** The deterministic skew-stress fixture (split out of SparkEntry): a
   * power-law join key over the lineitem fact whose cap key absorbs ~52%
@@ -11,8 +12,6 @@ import graft.engine.{Catalog, Ops}
   * ONE shared oracle — the measured evidence that Ops.saltedJoin spreads
   * a scorching reducer. */
 object SkewFixture {
-
-  private def cat(s: SparkSession, dir: String) = new Catalog(s, dir)
 
   /** Deterministic power-law join key for the skew-stress fixture: an
     * md5-uniform u in (0,1) mapped through the exact inverse CDF

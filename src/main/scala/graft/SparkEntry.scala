@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Catalog, Checks, Ops, Sinks}
-import graft.llm.{Bpe, Classify, Dedup, Pq, Similarity, Spectral, TextStats, Unigram}
+import graft.llm.{Bpe, Classify, Dedup, Pq, SessionMemo, Similarity, Spectral, TextStats, Unigram}
 import graft.multimodal.Multimodal
 import graft.streaming.EventStreams
 
@@ -18,7 +18,9 @@ import graft.streaming.EventStreams
   */
 object SparkEntry {
 
-  private[graft] def cat(s: SparkSession, dir: String) = new Catalog(s, dir)
+  /** One [[Catalog]] per (session, dir): every query shares its schemas. */
+  private[graft] def cat(s: SparkSession, dir: String): Catalog = catalogs.getOrBuild(s, dir)(new Catalog(s, dir))
+  private val catalogs = new SessionMemo[Catalog](_ => ())
 
   /** Per-session scratch path: write-then-read queries must not share a fixed
     * tmpdir location — two concurrent graft processes (an overlapping Verify
@@ -34,9 +36,9 @@ object SparkEntry {
     * 32-bit String.hashCode suffix left two different dirs able to collide
     * and silently serve one corpus's artifacts to the other; 48 bits of md5
     * makes that negligible. Caveat (inherent to any name-keyed memo): data
-    * REWRITTEN IN PLACE at the same dir still reuses stale artifacts — the
-    * refit/rebuild hooks (ivfFitted(refit=true), dupGraphEdges(refit=true),
-    * dropping the bucketed tables) are the escape hatch. */
+    * REWRITTEN IN PLACE at the same dir still reuses stale on-disk artifacts
+    * — dropping them is the escape hatch. The in-memory fit memos key on the
+    * input's table snapshot instead, so a rewrite refits them. */
   private[graft] def dirFingerprint(dir: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Catalog, Ops}
+import graft.engine.Ops
+import SparkEntry.cat
 
 /** The 22 adapted TPC-H queries and their DuckDB oracles — the classic
   * relational benchmark tier, split out of SparkEntry (which merges both
@@ -14,8 +15,6 @@ import graft.engine.{Catalog, Ops}
   * and oracle-checked by the driver.
   */
 object TpchQueries {
-
-  private def cat(s: SparkSession, dir: String) = new Catalog(s, dir)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_tpch_q1" -> ((s, dir) => {

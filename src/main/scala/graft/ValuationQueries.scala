@@ -3,16 +3,14 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Catalog
 import graft.llm.{Classify, TextStats}
+import SparkEntry.cat
 
 /** The data-valuation tier (split out of SparkEntry): leave-one-source-out
   * ablation and exact source-granularity Data Shapley, both over the
   * q_text_classifier hashedTf featurization, with unrolled sufficient-
   * stats oracles. */
 object ValuationQueries {
-
-  private def cat(s: SparkSession, dir: String) = new Catalog(s, dir)
 
   /** Player cap shared by the q_source_shapley query AND its oracle: the
     * Spark side passes it to Classify.sourceShapley; the oracle derives

@@ -6,6 +6,7 @@ import scala.util.Try
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.StructType
 
 /** Spark-native analog of the reference's catalog surface: `SHOW TABLES`
@@ -19,44 +20,42 @@ import org.apache.spark.sql.types.StructType
   * path, `file:`, HDFS, S3). Reads are lazy DataFrames, so Catalyst column
   * pruning / predicate pushdown reach the parquet scan untouched.
   *
-  * Schema reuse. Parquet schema inference costs one Spark job per read, so
-  * each instance remembers the raw inferred schema of every table it has
-  * read, keyed by a fingerprint of the table's files (name, length and
-  * modification time of each visible file) and by the session confs that
-  * change inference ([[inferenceConfs]]). [[table]] lists the table on every
-  * call: while the fingerprint and confs match it reads with the remembered
-  * schema and runs no job; otherwise it infers again and remembers the new
-  * schema. A table rewritten in place (an ingest, `mode("overwrite")`,
-  * [[bootstrapSampleData]]) therefore never serves a stale schema. Missing
-  * tables and directories with subdirectories (partitioned layouts) are
-  * never remembered: they always go through plain inference, which keeps
-  * Spark's own errors and partition discovery. Safe to share between
+  * Schema reuse, one listing per read. Inference costs one Spark job per
+  * read, so each instance remembers every table's raw inferred schema with
+  * the table's [[ParquetFooters.snapshot]] and the session confs that change
+  * inference ([[inferenceConfs]]). [[table]] reads a remembered table with
+  * that schema (one listing, no job) and keeps the frame while its snapshot
+  * and the confs equal the remembered ones; otherwise it infers again and
+  * remembers the new schema, so a table rewritten in place (an ingest,
+  * `mode("overwrite")`, [[bootstrapSampleData]]) never serves a stale
+  * schema. Missing tables and partitioned layouts are never remembered: they
+  * keep Spark's own errors and partition discovery. Safe to share between
   * threads.
+  *
+  * The session's conf is never written. Parquet reads
+  * `spark.sql.legacy.parquet.nanosAsLong` from it alone, so the session's
+  * owner sets it (every session builder in this repo does) for
+  * [[TsNorm.normalizeTs]] to convert `TIMESTAMP(NANOS)` columns; without it
+  * such a column fails with Spark's own `AnalysisException`.
   */
 final class Catalog(val spark: SparkSession, val dir: String) {
 
-  // Parquet TIMESTAMP(NANOS) columns are rejected by Spark unless read as
-  // raw longs; [[TsNorm.normalizeTs]] then converts whatever physical shape
-  // the generator produced (ns-as-long, µs NTZ, µs UTC) to TimestampType.
-  spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-  /** Table name → (fingerprint, raw inferred schema). */
-  private val schemas = new ConcurrentHashMap[String, (Catalog.Fingerprint, StructType)]()
+  /** Table name → ((snapshot, inference confs) it was read under, raw schema). */
+  private val schemas = new ConcurrentHashMap[String, ((Seq[(String, Long, Long)], Seq[Option[String]]), StructType)]()
 
   /** Full-table scan (reference S6, `SELECT * FROM t`, server.js:400-404). */
   def table(name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val raw = fingerprint(path) match {
-      case None => spark.read.parquet(path)
-      case Some(fp) =>
-        Option(schemas.get(name)) match {
-          case Some((`fp`, schema)) => spark.read.schema(schema).parquet(path)
-          case _ =>
-            val df = spark.read.parquet(path)
-            schemas.put(name, fp -> df.schema)
-            df
-        }
-    }
+    val confs = Catalog.inferenceConfs.map(spark.conf.getOption)
+    def seen(df: DataFrame) = (ParquetFooters.snapshot(df.queryExecution.analyzed), confs)
+    val raw = Option(schemas.get(name))
+      .collect { case (at @ (_, `confs`), schema) => at -> spark.read.schema(schema).parquet(path) }
+      .collect { case (at, df) if seen(df) == at => df }
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        if (Catalog.partitioned(df)) schemas.remove(name) else schemas.put(name, seen(df) -> df.schema)
+        df
+      }
     TsNorm.normalizeTs(raw)
   }
 
@@ -102,22 +101,6 @@ final class Catalog(val spark: SparkSession, val dir: String) {
     }
   }
 
-  /** The table's files and the inference confs, or None when the table
-    * must not be remembered: the path is missing or holds subdirectories. */
-  private def fingerprint(path: String): Option[Catalog.Fingerprint] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Try(fs.getFileStatus(p)).toOption.flatMap { st =>
-      val files = if (st.isDirectory) fs.listStatus(p).toSeq else Seq(st)
-      if (files.exists(_.isDirectory)) None
-      else Some(Catalog.Fingerprint(
-        files.filter(f => Catalog.visible(f.getPath.getName))
-          .map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
-          .sorted,
-        Catalog.inferenceConfs.map(spark.conf.getOption)))
-    }
-  }
-
   /** Convenience accessors for the standard testdata tables. */
   def region: DataFrame    = table("region")
   def nation: DataFrame    = table("nation")
@@ -143,10 +126,7 @@ object Catalog {
     "spark.sql.parquet.mergeSchema",
     "spark.sql.caseSensitive")
 
-  private final case class Fingerprint(files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
-
-  /** Hadoop's convention for data files: names starting with `_` or `.`
-    * (`_SUCCESS`, checksums, temporaries) carry no rows. */
-  private[engine] def visible(name: String): Boolean =
-    !name.startsWith("_") && !name.startsWith(".")
+  /** Whether a relation of `df` has partition columns. */
+  private def partitioned(df: DataFrame): Boolean = df.queryExecution.analyzed
+    .collectFirst { case LogicalRelation(rel: HadoopFsRelation, _, _, _, _) => rel.partitionSchema.nonEmpty }.contains(true)
 }

@@ -129,7 +129,8 @@ object CsvSource {
       .flatMap { st =>
         if (!st.isDirectory) Seq(st)
         else fs.listStatus(st.getPath).toSeq
-          .filter(f => f.isFile && Catalog.visible(f.getPath.getName))
+          // Hadoop's convention: `_`/`.` names (`_SUCCESS`, checksums) carry no rows.
+          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
           .sortBy(_.getPath.getName)
       }
       .iterator.map(st => firstIn(st.getPath)).collectFirst { case Some(line) => line }

@@ -14,7 +14,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
   *
   * Driver memory this holds: at most `SessionMemo.MaxEntries` × [[MaxBytes]]
   * for the IVF indexes the fit memo keeps, plus one located run of at most
-  * [[MaxBytes]] per page being served. */
+  * [[MaxBytes]] per page being served, plus the remembered footers of at
+  * most `SessionMemo.MaxEntries` × [[ParquetFooters.MaxFiles]] files. */
 private[graft] object LocalAnswers {
 
   /** The most bytes one request reads onto the driver: a located run's

@@ -17,7 +17,7 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, AttributeSet, Descending, Literal, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort, SubqueryAlias}
 import org.apache.spark.sql.catalyst.types.{DataTypeUtils, PhysicalDataType}
-import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation, PartitionedFile, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,12 +28,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Both answers apply only to a plain Parquet scan: a frame whose plan is
   * nothing but `Project`s (and aliases) over one non-partitioned,
-  * non-bucketed Parquet `HadoopFsRelation` ([[Catalog.table]] frames,
-  * `TsNorm` included).
+  * non-bucketed Parquet `HadoopFsRelation` over a listed file index
+  * ([[Catalog.table]] frames, `TsNorm` included).
   * Each returns None for any other frame, for a table of more than
   * [[MaxFiles]] files, and when a footer cannot be read; the caller then
-  * takes its general path. Footers are read when the method is called, from
-  * the file listing the frame's relation already holds.
+  * takes its general path. Footers are read once per table [[snapshot]] and
+  * relation options, from the file listing the frame's relation holds.
   *
   * A located page whose run of row groups holds at most
   * [[LocalAnswers.MaxBytes]] uncompressed bytes is read on the driver, from
@@ -50,7 +50,7 @@ object ParquetFooters {
   /** The frame's row count: the sum of its row groups' row counts. */
   def rowCount(df: DataFrame): Option[Long] =
     plainScan(df.queryExecution.analyzed)
-      .flatMap(scan => footers(scan.rel))
+      .flatMap(footers)
       .map(_.iterator.flatMap(_._2.getBlocks.asScala).map(_.getRowCount).sum)
 
   /** Rows `[offset, offset + size)` of `df` ordered by `orderBy`, read from
@@ -87,7 +87,7 @@ object ParquetFooters {
       if size > 0
       (key, descending) <- sortKey(df, orderBy)
       if scan.passed.contains(key)
-      fs <- footers(scan.rel)
+      fs <- footers(scan)
       groups <- keyRanges(fs, key)
       located <- locate(groups, key.dataType, descending, offset, size)
     } yield located match {
@@ -132,23 +132,38 @@ object ParquetFooters {
       plainScan(child).map(scan => scan.copy(passed =
         AttributeSet(list.collect { case a: AttributeReference if scan.passed.contains(a) => a })))
     case leaf @ LogicalRelation(rel: HadoopFsRelation, output, _, false, _)
-        if rel.fileFormat.isInstanceOf[ParquetFileFormat] &&
-          rel.partitionSchema.isEmpty && rel.bucketSpec.isEmpty =>
+        if rel.fileFormat.isInstanceOf[ParquetFileFormat] && rel.partitionSchema.isEmpty &&
+          rel.bucketSpec.isEmpty && rel.location.isInstanceOf[PartitioningAwareFileIndex] =>
       Some(Scan(leaf, rel, AttributeSet(output)))
     case _ => None
   }
 
-  /** Each of the relation's files with its footer, or None past
-    * [[MaxFiles]] files or when a footer cannot be read. */
-  private def footers(rel: HadoopFsRelation): Option[Seq[(FileStatus, ParquetMetadata)]] = Try {
-    val files = rel.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus)
+  /** A frame's table snapshot, the one table identity of [[Catalog.table]],
+    * the footers below and `SessionMemo` keys: path, length and mtime of each
+    * file its `HadoopFsRelation`s over a `PartitioningAwareFileIndex` listed
+    * when it was built. Lists nothing: a frame keeps its snapshot. */
+  private[graft] def snapshot(plan: LogicalPlan): Seq[(String, Long, Long)] =
+    plan.collectWithSubqueries { case LogicalRelation(rel: HadoopFsRelation, _, _, _, _) => listed(rel) }
+      .flatten.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+
+  /** The files the relation's index listed, in path order. */
+  private def listed(rel: HadoopFsRelation): Seq[FileStatus] = Seq(rel.location)
+    .collect { case index: PartitioningAwareFileIndex => index.allFiles() }.flatten.sortBy(_.getPath.toString)
+
+  /** Footers by (session, snapshot, relation options); releases nothing. */
+  private val footerMemo = new graft.llm.SessionMemo[Option[Seq[(FileStatus, ParquetMetadata)]]](_ => ())
+
+  /** Each of the scan's files with its footer, or None past [[MaxFiles]]
+    * files or when a footer cannot be read. */
+  private def footers(scan: Scan): Option[Seq[(FileStatus, ParquetMetadata)]] = {
+    val (rel, files) = (scan.rel, listed(scan.rel))
     if (files.size > MaxFiles) None
-    else {
+    else footerMemo.getOrBuild(rel.sparkSession, snapshot(scan.leaf), rel.options) {
       val conf = rel.sparkSession.sessionState.newHadoopConfWithOptions(rel.options)
-      Some(files.map(f => f -> ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.NO_FILTER)))
+      Try(files.map(f => f -> ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.NO_FILTER))).toOption
     }
-  }.toOption.flatten
+  }
 
   /** The single sort key of `df.orderBy(orderBy)` and whether it descends,
     * when it is one of `df`'s own columns. */

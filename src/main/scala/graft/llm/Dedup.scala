@@ -638,9 +638,9 @@ object Dedup {
 
   /** Rare-gram edge list (the q_dedup_clusters rule): a word n-gram occurring
     * in exactly two documents links them. Memoized per (session, docs, n);
-    * `refit = true` drops (and releases) the cached entry first — the escape
-    * hatch for parquet rewritten in place behind an identical plan, the same
-    * contract as [[Similarity.ivfFitted]]. */
+    * `refit = true` drops (and releases) the cached entry first, forcing a
+    * rebuild that a rewrite of the docs' files no longer needs (the key
+    * holds their snapshot) — the same contract as [[Similarity.ivfFitted]]. */
   def dupGraphEdges(docs: DataFrame, idCol: String = "doc_id",
                     textCol: String = "text", n: Int = 3,
                     refit: Boolean = false): DataFrame = {
@@ -651,8 +651,8 @@ object Dedup {
   }
 
   /** Connected components of [[dupGraphEdges]], memoized alongside them.
-    * `refit = true` rebuilds both the components AND the underlying edge
-    * memo (a stale edge frame would just feed the rebuilt components). */
+    * `refit = true` forces a rebuild of both the components AND the
+    * underlying edge memo; a rewrite of file-backed docs no longer needs it. */
   def dupGraphComponents(docs: DataFrame, idCol: String = "doc_id",
                          textCol: String = "text", n: Int = 3,
                          refit: Boolean = false): DataFrame = {

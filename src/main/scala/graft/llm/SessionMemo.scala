@@ -6,8 +6,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * PQ): a long-lived session fits an index or model once and probes it many
   * times, so refitting per call would be rebuilding a B-tree per lookup.
   *
-  * Keyed on (session, CANONICALIZED input plan, params) — equality-checked,
-  * not hashed, so two different corpora can never collide into one entry.
+  * Keyed on (session, CANONICALIZED input plan, table snapshot, params) —
+  * equality-checked, not hashed, so two different corpora can never collide
+  * into one entry; the snapshot ([[graft.engine.ParquetFooters.snapshot]]:
+  * each input file's path, length and mtime) makes a frame read after an
+  * in-place rewrite miss, while one built before keeps its old snapshot.
   * A value built from no input plan is keyed on (session, params) alone.
   * Entries of stopped sessions are purged on access without `release`
   * (their storage died with the executors). An access-ordered LRU holds at
@@ -34,8 +37,8 @@ private[graft] final class SessionMemo[V](release: V => Unit) {
         }
       })
 
-  private def key(df: DataFrame, params: Seq[Any]): Key =
-    (df.sparkSession, df.queryExecution.analyzed.canonicalized +: params)
+  private def key(df: DataFrame, params: Seq[Any]): Key = (df.sparkSession,
+    df.queryExecution.analyzed.canonicalized +: graft.engine.ParquetFooters.snapshot(df.queryExecution.analyzed) +: params)
 
   private def purgeStopped(): Unit =
     entries.keySet.removeIf(k => k._1.sparkContext.isStopped)

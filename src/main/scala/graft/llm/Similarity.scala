@@ -430,7 +430,8 @@ object Similarity {
     * and vectors [[ivfTopK]] can score on the driver, collects its lists
     * once into the entry. The memo keeps at most `SessionMemo.MaxEntries`
     * fits; an evicted or refit entry is unpersisted and its lists dropped.
-    * This is the in-memory analog of writeIvfIndex → ivfTopKFromIndex (the
+    * `refit = true` forces a rebuild; a rewritten file-backed input refits
+    * without it. This is the in-memory analog of writeIvfIndex → ivfTopKFromIndex (the
     * durable path a 100 TB corpus uses instead). */
   def ivfFitted(df: DataFrame, vecCol: String, nLists: Int,
                 seed: Long = 42L, refit: Boolean = false,
@@ -454,9 +455,9 @@ object Similarity {
     * index, which scans the full corpus and scores ∝ nProbe/nLists of it.
     * The persisted layout of [[writeIvfIndex]] is what prunes that scan. The
     * recall knob is nProbe; nProbe = nLists degrades to exact brute force.
-    * The fitted index is memoized per (session, input, params); pass
-    * `refit = true` to force a rebuild (e.g. after the corpus changed behind
-    * an identical plan). */
+    * The fitted index is memoized per (session, input, params), the input
+    * including its table snapshot; `refit = true` forces a rebuild, which a
+    * rewrite of the input's files no longer needs. */
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
               query: Seq[Double], k: Int, nLists: Int = 16, nProbe: Int = 4,
               seed: Long = 42L, refit: Boolean = false): DataFrame = {

@@ -112,4 +112,28 @@ class CatalogSpec extends AnyFunSuite {
     assert(c.table("t1").count() == 1)
     assert(new Catalog(spark, s"$uri/absent").listTables().isEmpty)
   }
+
+  test("table and describe leave the session's conf unchanged") {
+    val dir = Files.createTempDirectory("graft_cat_conf").toString
+    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$dir/t.parquet")
+    val session = spark.newSession()
+    session.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    val before = session.conf.getAll
+    val c = new Catalog(session, dir)
+    assert(c.table("t").count() == 1)
+    assert(c.describe("t") == Seq("id" -> "bigint", "v" -> "string"))
+    assert(session.conf.getAll == before)
+  }
+
+  test("a table read with its remembered schema lists the table directory once") {
+    val dir = Files.createTempDirectory("graft_cat_listing").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$dir/t.parquet")
+    val c = new Catalog(spark, CountingFs.uri(spark, dir))
+    val (_, inferListings) = CountingFs.during("list", s"$dir/t.parquet")(c.table("t"))
+    assert(inferListings >= 1) // the counter sees the first read
+    val (df, listings) = CountingFs.during("list", s"$dir/t.parquet")(c.table("t"))
+    assert(listings == 1)
+    assert(df.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq(1L -> "a", 2L -> "b"))
+  }
 }

@@ -98,6 +98,16 @@ class ParquetFootersSpec extends AnyFunSuite {
     }
   }
 
+  test("a second countTotal on an unchanged table opens no file") {
+    val dir = Files.createTempDirectory("graft_footers_once").toString
+    keyed(1000, 4).write.parquet(s"$dir/t.parquet")
+    val c = new Catalog(spark, CountingFs.uri(spark, dir))
+    val (first, opened) = CountingFs.during("open", dir)(Ops.countTotal(c.table("t")).collect().toSeq)
+    assert(first == Seq(Row(1000L)) && opened >= 4) // the counter sees the footer reads
+    val (second, reopened) = CountingFs.during("open", dir)(Ops.countTotal(c.table("t")).collect().toSeq)
+    assert(second == Seq(Row(1000L)) && reopened == 0)
+  }
+
   test("a run over LocalAnswers.MaxBytes is read by the job path") {
     val half = LocalAnswers.MaxBytes / 2 + 1
     val Seq(a, b) = Seq("a", "b").map(f => new FileStatus(half, false, 1, half, 0, new Path(s"/t/$f.parquet")))

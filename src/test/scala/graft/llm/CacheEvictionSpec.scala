@@ -71,4 +71,17 @@ class CacheEvictionSpec extends AnyFunSuite {
       "components refit must also rebuild the underlying edge frame")
     assert(comps2.orderBy("id").collect().toSeq == expected)
   }
+
+  test("dupGraphEdges on docs rewritten in place rebuilds without refit") {
+    val path = java.nio.file.Files.createTempDirectory("graft_dup_rewrite").toString + "/docs.parquet"
+    corpus("rewrite-before").write.parquet(path)
+    val first = Dedup.dupGraphEdges(spark.read.parquet(path))
+    val firstIds = CacheHygiene.checkpointRddIds(first)
+    assert(first.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq(1L -> 2L))
+    Seq((1L, "x y z w rewrite-after"), (5L, "x y z w rewrite-after"), (7L, "p q r s rewrite-after"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(path)
+    val rebuilt = Dedup.dupGraphEdges(spark.read.parquet(path))
+    assert(CacheHygiene.checkpointRddIds(rebuilt) != firstIds, "a rewrite must rebuild, not serve the memo")
+    assert(rebuilt.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq(1L -> 5L))
+  }
 }

@@ -64,6 +64,21 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
       "an equal plan built anew hits the entry")
   }
 
+  test("frames read before and after an overwrite of their files are two entries") {
+    val c = new Counting
+    val p = java.nio.file.Files.createTempDirectory("graft_memo_rewrite").toString + "/t.parquet"
+    Seq(1L, 2L).toDF("id").write.parquet(p)
+    val before = spark.read.parquet(p)
+    c.memo.getOrBuild(before, 1)(new Fake("before"))
+    Seq(3L).toDF("id").write.mode("overwrite").parquet(p)
+    val after = spark.read.parquet(p)
+    c.memo.getOrBuild(after, 1)(new Fake("after"))
+    assert(c.memo.size == 2)
+    assert(c.memo.getOrBuild(before, 1)(new Fake("dup")).name == "before",
+      "a frame built before the rewrite keeps its snapshot")
+    assert(c.memo.getOrBuild(spark.read.parquet(p), 1)(new Fake("dup")).name == "after")
+  }
+
   test("invalidate releases the entry once and the next getOrBuild rebuilds") {
     val c = new Counting
     val df = frame("refit")

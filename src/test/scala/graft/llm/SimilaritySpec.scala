@@ -217,6 +217,25 @@ class SimilaritySpec extends AnyFunSuite {
     assert(fresh != stale)
   }
 
+  test("ivfTopK on a catalog table rewritten in place answers from the new vectors without refit") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_rewrite").toString
+    val c = new graft.engine.Catalog(spark, dir)
+    val after = corpus(60, 8, seed = 4L)
+    val q = after(9)._2.toSeq
+    def top(df: DataFrame) = Similarity.ivfTopK(df, "vec_id", "embedding", q, 5, nLists = 4, nProbe = 4)
+    corpus(60, 8, seed = 3L).toDF("vec_id", "embedding").write.parquet(s"$dir/v.parquet")
+    val stale = top(c.table("v")).collect().toSeq
+    after.toDF("vec_id", "embedding").write.mode("overwrite").parquet(s"$dir/v.parquet")
+    val df = c.table("v")
+    val fresh = top(df).collect().toSeq
+    // nProbe = nLists: the probed lists are the whole corpus
+    assert(fresh == Similarity.bruteForceTopK(df, "vec_id", "embedding", q, 5).collect().toSeq)
+    assert(fresh != stale)
+    val (again, jobs) = jobsLaunchedBy(top(c.table("v")).collect().toSeq)
+    assert(jobs == 0, "a second frame of the unchanged table hits the memo")
+    assert(again == fresh)
+  }
+
   test("ivfFitted: an evicted or refit entry drops its driver lists") {
     def small(tag: Int) = Seq((0L, Array(1.0, tag.toDouble)), (1L, Array(tag.toDouble, 1.0)),
       (2L, Array(2.0, 1.0 + tag))).toDF("vec_id", "embedding")

@@ -78,19 +78,10 @@ class SessionIsolationSpec extends AnyFunSuite {
   test("(a) every streaming runner leaves the caller's conf unchanged") {
     val caller = callerSession()
     val before = caller.conf.getAll
-    // q_stream_static_join builds its dimension through Catalog, whose
-    // constructor sets nanosAsLong on its session; its runner is driven with
-    // a plain read of the same table instead.
-    val viaQueries = StreamQueries.queries - "q_stream_static_join"
-    val staticJoin = "q_stream_static_join" -> ((s: SparkSession, dir: String) =>
-      EventStreams.runStreamStaticJoinOnce(s, s"$dir/events.parquet",
-        s.read.parquet(s"$dir/customer.parquet"),
-        col("user_id") === col("c_custkey"), "c_mktsegment"))
-    for ((name, run) <- (viaQueries + staticJoin).toSeq.sortBy(_._1)) {
+    for ((name, run) <- StreamQueries.queries.toSeq.sortBy(_._1)) {
       run(caller, sf).collect()
       assert(caller.conf.getAll == before, s"$name changed the caller's conf")
     }
-    assert(viaQueries.size + 1 == StreamQueries.queries.size)
   }
 
   test("(b) drains and both waves of a restart drill run on 2 shuffle partitions") {
