@@ -231,7 +231,7 @@ object DedupQueries {
       val b = d.select((col("doc_id") - 1).as("id_a"), col("doc_id").as("id_b"), col("text").as("tb"))
       val joined = a.join(b, "id_a")
       joined.select(col("id_a"), col("id_b"),
-          Dedup.ngramJaccard(joined, col("ta"), col("tb"), 3).as("jaccard"))
+          Dedup.ngramJaccard(col("ta"), col("tb"), 3).as("jaccard"))
         .orderBy("id_a")
     }),
 
@@ -247,8 +247,8 @@ object DedupQueries {
         col("text").as("tb"))
       val joined = a.join(b, "id_a")
       joined.select(col("id_a"), col("id_b"),
-          Dedup.ngramContainment(joined, col("ta"), col("tb"), 3).as("cont_ab"),
-          Dedup.ngramContainment(joined, col("tb"), col("ta"), 3).as("cont_ba"))
+          Dedup.ngramContainment(col("ta"), col("tb"), 3).as("cont_ab"),
+          Dedup.ngramContainment(col("tb"), col("ta"), 3).as("cont_ba"))
         .orderBy("id_a")
     }),
 

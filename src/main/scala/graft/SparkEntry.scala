@@ -1105,8 +1105,9 @@ object SparkEntry {
       // (products < 2⁶³ in both engines), bands are 16×4 concatenated keys.
       // Ground truth uses the EQUALITY join on shared gram hashes — a pair
       // with empty intersection can't reach any threshold, so no all-pairs
-      // scan; candidates use the banded equality join. Both shapes are the
-      // scale-correct ones, just over portable hashes.
+      // scan; candidates come from the operators' own banded equality join
+      // (Dedup.lshCandidates). Both shapes are the scale-correct ones, just
+      // over portable hashes.
       import s.implicits._
       val P = 2147483647L
       val (nh, bands, rws) = (64, 16, 4)
@@ -1132,14 +1133,8 @@ object SparkEntry {
         min((lit(1000003L * (j + 1)) * col("x") + lit(777771L * j)) % P).as(s"s$j"))
       val sigs = gh.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*)
       val bandKeys = (0 until bands).map(bd =>
-        struct(lit(bd).as("band"),
-          concat_ws("-", (0 until rws).map(r => col(s"s${bd * rws + r}")): _*).as("bk")))
-      val banded = sigs.select(col("doc_id"), explode(array(bandKeys: _*)).as("e"))
-        .select(col("doc_id"), col("e.band").as("band"), col("e.bk").as("bk"))
-      val cand = banded.as("a").join(banded.as("b"), Seq("band", "bk"))
-        .filter(col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .distinct()
+        concat_ws("-", (0 until rws).map(r => col(s"s${bd * rws + r}")): _*))
+      val cand = Dedup.lshCandidates(sigs, col("doc_id"), array(bandKeys: _*))
       val joined = truth
         .join(cand.withColumn("hit", lit(1)), Seq("id_a", "id_b"), "left")
       // 5-row thresholds frame × bounded truth frame: the non-equi join is a

@@ -3,9 +3,11 @@ package graft.engine
 import java.io.{BufferedReader, InputStream, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Flat-file (CSV/TXT) sources with the reference's semantics: every column
@@ -25,9 +27,6 @@ object CsvSource {
     "locality", "town_city", "district", "county", "ppd_category_type",
     "record_status")
 
-  private def allStringSchema(names: Seq[String]): StructType =
-    StructType(names.map(n => StructField(n, StringType, nullable = true)))
-
   /** Does the filename select the preset UK property schema?
     * (reference/server/server.js:263-266) */
   def isUkPropertyFile(fileName: String): Boolean = {
@@ -35,38 +34,47 @@ object CsvSource {
     f.contains("pp-") || f.contains("price-paid")
   }
 
-  /** Header-row CSV scan (S2): first line supplies trimmed column names,
+  /** Header-row CSV scan (S2): first record supplies trimmed column names,
     * every column String, blank lines dropped (csv-parse `skip_empty_lines`,
     * server.js:480). Spark's CSV reader drops blank lines natively. */
-  def readWithHeader(spark: SparkSession, path: String, delimiter: String = ","): DataFrame = {
-    val header = firstLine(spark, path)
-    val names = header.split(java.util.regex.Pattern.quote(delimiter), -1).map(_.trim).toSeq
-    spark.read
-      .option("header", "true")
-      .option("sep", delimiter)
-      .schema(allStringSchema(names))
-      .csv(path)
-  }
+  def readWithHeader(spark: SparkSession, path: String, delimiter: String = ","): DataFrame =
+    scan(spark, path, firstRecord(spark, path, delimiter).map(_.trim), header = true, delimiter)
 
   /** Headerless CSV fallback scan (S3): `column_1..column_N` counted from the
     * first record (server.js:322-349). */
   def readHeaderless(spark: SparkSession, path: String, delimiter: String = ","): DataFrame = {
-    val n = firstLine(spark, path).split(java.util.regex.Pattern.quote(delimiter), -1).length
-    val names = (1 to n).map(i => s"column_$i")
-    spark.read
-      .option("header", "false")
-      .option("sep", delimiter)
-      .schema(allStringSchema(names))
-      .csv(path)
+    val n = firstRecord(spark, path, delimiter).length
+    scan(spark, path, (1 to n).map(i => s"column_$i"), header = false, delimiter)
   }
 
   /** Preset-schema scan (S4): UK property files — fixed 16-col String schema,
     * no header row consumed (server.js:261-278). */
   def readUkProperty(spark: SparkSession, path: String): DataFrame =
+    scan(spark, path, ukPropertyColumns, header = false)
+
+  /** The options of every scan here; the sniffed first line is tokenized
+    * under the same ones. */
+  private def csvOptions(header: Boolean, delimiter: String): Map[String, String] =
+    Map("header" -> header.toString, "sep" -> delimiter)
+
+  /** The one CSV scan: every column a String named by `names`. */
+  private def scan(spark: SparkSession, path: String, names: Seq[String],
+                   header: Boolean, delimiter: String = ","): DataFrame =
     spark.read
-      .option("header", "false")
-      .schema(allStringSchema(ukPropertyColumns))
+      .options(csvOptions(header, delimiter))
+      .schema(StructType(names.map(n => StructField(n, StringType, nullable = true))))
       .csv(path)
+
+  /** The fields of the sniffed first line, tokenized by univocity with the
+    * parser settings Spark's scan derives from the same options, so a quoted
+    * field that holds the delimiter stays one field. An empty line is one
+    * empty field. */
+  private def firstRecord(spark: SparkSession, path: String, delimiter: String): Seq[String] = {
+    val settings = new CSVOptions(csvOptions(header = false, delimiter), false,
+      spark.sessionState.conf.sessionLocalTimeZone).asParserSettings
+    Option(new CsvParser(settings).parseLine(firstLine(spark, path)))
+      .filter(_.nonEmpty).fold(Seq(""))(_.toSeq.map(f => Option(f).getOrElse("")))
+  }
 
   /** Upload staging (S1, reference/server/server.js: multer writes the
     * multipart body under `uploads/` and the original filename rides along

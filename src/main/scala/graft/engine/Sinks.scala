@@ -123,10 +123,7 @@ object Sinks {
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val loc = new java.io.File(
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    if (loc.exists()) rm(loc)
+    org.apache.hadoop.fs.FileUtil.fullyDelete(loc)
     writeBucketed(df, table, key, buckets)
   }
 

@@ -122,58 +122,87 @@ object Dedup {
   def lshBands(sig: Column, bands: Int, rows: Int): Column =
     graft.functions.ArrayKernels.lshBandHashes(sig, bands, rows)
 
-  /** Near-duplicate candidate pairs via MinHash + LSH, verified with the
-    * exact Jaccard over shingle sets. Returns (id_a, id_b, jaccard) with
-    * id_a < id_b, jaccard >= threshold.
+  /** xxhash MinHash band keys of a signature: `bands` bands of
+    * numHashes / bands minima, each hashed to one key. [[minhashNearDups]]
+    * and the stream detector ([[graft.streaming.StreamingNearDup]]) band
+    * with this one column, so a document falls in the same buckets in both. */
+  private[graft] def minhashBandKeys(sig: Column, numHashes: Int, bands: Int): Column =
+    lshBands(sig, bands, numHashes / bands)
+
+  /** Exact Jaccard |A∩B| / |A∪B| of two hash sets, rounded to 4 decimals:
+    * the verify score of both MinHash operators and of [[ngramJaccard]].
+    * Two empty sets score 0. */
+  private def jaccard(a: Column, b: Column): Column =
+    round(size(array_intersect(a, b)).cast("double") /
+          greatest(size(array_union(a, b)), lit(1)), 4)
+
+  /** Near-duplicate pairs via MinHash + LSH, verified with the exact
+    * Jaccard over shingle sets. Returns (id_a, id_b, jaccard) with
+    * id_a < id_b, jaccard >= threshold, ordered by (id_a, id_b).
+    * `minhash=128, bands=32, rows=4` targets ~0.5 Jaccard sensitivity.
     *
-    * Scale path: explode to (band, bucket, id) and self-join on the bucket
-    * key — an equality shuffle join, never a cross join. `minhash=128,
-    * bands=32, rows=4` targets ~0.5 Jaccard sensitivity.
-    */
-  /** @param cacheShingles persist the shingle table, which three branches
-    *        consume (signature/banding plus both verify joins) — without it
-    *        the scan+shingle stage runs 3×. The cache entry outlives the
-    *        call (the result is lazy, so this method cannot unpersist);
-    *        long-lived sessions sweeping many thresholds should pass false
-    *        or clear with `spark.catalog.clearCache()` between sweeps. */
+    * The shingle table is persisted: the signature stage and both verify
+    * joins read it, and without the cache the scan and shingle stage run
+    * 3×. The cache entry outlives the call (the result is lazy, so this
+    * method cannot unpersist); long-lived sessions sweeping many thresholds
+    * should clear it with `spark.catalog.clearCache()` between sweeps. */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       threshold: Double = 0.5, k: Int = 3,
                       numHashes: Int = 128, bands: Int = 32,
-                      seed: Long = 42L, cacheShingles: Boolean = true): DataFrame = {
-    val rows = numHashes / bands
-    val shBase = df
-      .select(col(idCol).as("id"), shingles(col(textCol), k).as("sh"))
+                      seed: Long = 42L): DataFrame =
+    minhashPairs(df, idCol, shingles(col(textCol), k), threshold, numHashes, seed)(
+      minhashBandKeys(_, numHashes, bands))
+
+  /** The staging both MinHash operators share, ahead of [[lshPairs]]: the
+    * persisted (id, sh) table of non-empty shingle sets, and each set's
+    * signature behind a repartition(id). `bandKeys` cuts a signature into
+    * its band keys; pairs are verified by the exact [[jaccard]]. */
+  private def minhashPairs(df: DataFrame, idCol: String, shingleSet: Column,
+                           threshold: Double, numHashes: Int, seed: Long)(
+                           bandKeys: Column => Column): DataFrame = {
+    val sh = df.select(col(idCol).as("id"), shingleSet.as("sh"))
       .filter(size(col("sh")) > 0)
-    val sh = if (cacheShingles)
-      shBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else shBase
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // repartition = an optimizer barrier as much as a distribution choice:
     // without it CollapseProject inlines the 128-hash signature expression
-    // into the band-explode lambda and recomputes it per band (32×/row).
-    val sigs = sh
-      .withColumn("sig", minhashSignature(col("sh"), numHashes, seed))
-      .select("id", "sig")
+    // into the band-key expression, and the portable slice lambda then
+    // recomputes it per band (32×/row).
+    val sigs = sh.select(col("id"), minhashSignature(col("sh"), numHashes, seed).as("sig"))
       .repartition(col("id"))
-    // Narrow band table: (band, bucket, id) only — the shuffle for candidate
-    // generation never carries shingle arrays or signatures.
-    val banded = sigs
-      .select(col("id"), posexplode(lshBands(col("sig"), bands, rows)))
-      .toDF("id", "band", "bucket")
-    val candidates = banded.alias("a")
-      .join(banded.alias("b"), Seq("band", "bucket"))
+    lshPairs(sigs, col("id"), bandKeys(col("sig")), sh,
+      "jaccard", jaccard(col("sh_a"), col("sh_b")), threshold)
+  }
+
+  /** Candidate stage of banded LSH: the narrow (id, band, key) table of
+    * `rows`, one row per element of the `bandKeys` array, joined to itself
+    * on (band, key). Returns each (id_a, id_b) with id_a < id_b once,
+    * though a pair may share several bands. It is an equality shuffle join,
+    * never a cross join, and no payload rides it. */
+  private[graft] def lshCandidates(rows: DataFrame, id: Column, bandKeys: Column): DataFrame = {
+    val banded = rows.select(id.as("id"), posexplode(bandKeys).as(Seq("band", "key")))
+    banded.alias("a")
+      .join(banded.alias("b"), Seq("band", "key"))
       .filter(col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct() // a pair may collide in several bands
+      .distinct()
+  }
 
-    // Verify step touches shingles only for the (small) candidate set.
-    candidates
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard",
-        round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-              size(array_union(col("sh_a"), col("sh_b"))), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+  /** Banded LSH near-duplicate pairs, the one pipeline behind the MinHash
+    * and cosine operators: [[lshCandidates]], then the verify stage.
+    * `payload` (an `id` column plus the columns `score` reads) joins back
+    * once per side, its columns suffixed `_a` and `_b`, so it is touched
+    * only for the candidates. Returns (id_a, id_b, `scoreName`) where
+    * `score` >= threshold, ordered by (id_a, id_b). */
+  private[llm] def lshPairs(rows: DataFrame, id: Column, bandKeys: Column,
+                            payload: DataFrame, scoreName: String, score: Column,
+                            threshold: Double): DataFrame = {
+    def side(s: String) =
+      payload.select(payload.columns.toIndexedSeq.map(c => col(c).as(c + s)): _*)
+    lshCandidates(rows, id, bandKeys)
+      .join(side("_a"), "id_a").join(side("_b"), "id_b")
+      .withColumn(scoreName, score)
+      .filter(col(scoreName) >= threshold)
+      .select("id_a", "id_b", scoreName)
       .orderBy("id_a", "id_b")
   }
 
@@ -198,50 +227,16 @@ object Dedup {
     * keys that are the raw signature SLICES (equal slices ⇔ equal buckets,
     * definitionally — the hashed bucket key is only a width optimization),
     * so a DuckDB oracle re-derives the candidate set and the verified
-    * pairs bit-for-bit. Same staging and scale shape as the xxhash64 path:
-    * narrow (band, key, id) candidate join, exact-Jaccard verify touching
-    * shingles only for candidates. */
-  /** @param cacheShingles persist the shingle table, which three branches
-    *        consume (signature/banding plus both verify joins) — the same
-    *        contract and leak warning as [[minhashNearDups]]: the entry
-    *        outlives the call (the result is lazy); long-lived sessions
-    *        sweeping thresholds should pass false or clear with
-    *        `spark.catalog.clearCache()` between sweeps. */
+    * pairs bit-for-bit. Same staging, scale shape and shingle cache as the
+    * xxhash64 path, so the same `spark.catalog.clearCache()` advice holds. */
   def minhashNearDupsPortable(df: DataFrame, idCol: String, textCol: String,
                               threshold: Double = 0.5, k: Int = 3,
                               numHashes: Int = 128, bands: Int = 32,
-                              seed: Long = 42L,
-                              cacheShingles: Boolean = true): DataFrame = {
+                              seed: Long = 42L): DataFrame = {
     val rows = numHashes / bands
-    val shBase = df
-      .select(col(idCol).as("id"), md5Shingles(col(textCol), k).as("sh"))
-      .filter(size(col("sh")) > 0)
-    val sh = if (cacheShingles)
-      shBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else shBase
-    val sigs = sh
-      .withColumn("sig", minhashSignature(col("sh"), numHashes, seed))
-      .select("id", "sig")
-      .repartition(col("id")) // optimizer barrier: see minhashNearDups
-    val banded = sigs
-      .select(col("id"), posexplode(transform(
-        sequence(lit(0), lit(bands - 1)),
-        b => slice(col("sig"), b * lit(rows) + lit(1), lit(rows)))))
-      .toDF("id", "band", "key")
-    val candidates = banded.alias("a")
-      .join(banded.alias("b"), Seq("band", "key"))
-      .filter(col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    candidates
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard",
-        round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-              size(array_union(col("sh_a"), col("sh_b"))), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-      .orderBy("id_a", "id_b")
+    minhashPairs(df, idCol, md5Shingles(col(textCol), k), threshold, numHashes, seed)(sig =>
+      transform(sequence(lit(0), lit(bands - 1)),
+        b => slice(sig, b * lit(rows) + lit(1), lit(rows))))
   }
 
   // ---------------------------------------------------------------- SimHash
@@ -394,6 +389,14 @@ object Dedup {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
+  /** The small-graph gate's ONE bounded action, exposed so PlanQualitySpec
+    * can pin its shape: a CollectLimit directly over the raw edge plan —
+    * no InMemoryRelation (the r12 persist+count+collect formulation
+    * materialized the edge plan through the cache builder at ~2× the plain
+    * codegen pass) and no Union/distinct (the driver path needs neither). */
+  private[graft] def ccGateProbe(raw: DataFrame, driverThreshold: Long): DataFrame =
+    raw.limit(math.min(driverThreshold + 1, Int.MaxValue.toLong).toInt)
+
   /** Connected components over an undirected edge list: each node labeled
     * with the minimum node id reachable from it — the dedup endgame, where
     * near-dup PAIRS become duplicate CLUSTERS and one representative (the
@@ -418,14 +421,6 @@ object Dedup {
     * near-dups do), so this path fires often; past the threshold the
     * distributed pointer-jumping loop runs unchanged.
     * Identical output either way (spec-checked against the same reference). */
-  /** The small-graph gate's ONE bounded action, exposed so PlanQualitySpec
-    * can pin its shape: a CollectLimit directly over the raw edge plan —
-    * no InMemoryRelation (the r12 persist+count+collect formulation
-    * materialized the edge plan through the cache builder at ~2× the plain
-    * codegen pass) and no Union/distinct (the driver path needs neither). */
-  private[graft] def ccGateProbe(raw: DataFrame, driverThreshold: Long): DataFrame =
-    raw.limit(math.min(driverThreshold + 1, Int.MaxValue.toLong).toInt)
-
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIter: Int = 25,
                           driverThreshold: Long = 1000000L): DataFrame = {
@@ -564,20 +559,15 @@ object Dedup {
   /** Direct n-gram Jaccard similarity of candidate pairs (the verify
     * primitive, exposed standalone). Pairs must already be blocked/bucketed —
     * this is intentionally not an all-pairs API. */
-  def ngramJaccard(dfPairs: DataFrame, textA: Column, textB: Column, k: Int = 3): Column = {
-    val sa = shingles(textA, k)
-    val sb = shingles(textB, k)
-    round(size(array_intersect(sa, sb)).cast("double") /
-          greatest(size(array_union(sa, sb)), lit(1)), 4)
-  }
+  def ngramJaccard(textA: Column, textB: Column, k: Int = 3): Column =
+    jaccard(shingles(textA, k), shingles(textB, k))
 
   /** Asymmetric n-gram containment |A∩B| / |A| (Broder's containment, the
     * second half of the SEQUENCES'97 pair): ≈1 when A is quoted inside a
     * much larger B even though Jaccard ≈ |A|/|B| ≈ 0 — the subset-dup
     * signal symmetric similarity dilutes away. Same blocked-pairs contract
     * as [[ngramJaccard]]. */
-  def ngramContainment(dfPairs: DataFrame, textA: Column, textB: Column,
-                       k: Int = 3): Column = {
+  def ngramContainment(textA: Column, textB: Column, k: Int = 3): Column = {
     val sa = shingles(textA, k)
     val sb = shingles(textB, k)
     round(size(array_intersect(sa, sb)).cast("double") /

@@ -499,27 +499,6 @@ object Similarity {
   def quantizeInt8(vec: Column): Column =
     graft.functions.ArrayKernels.quantizeInt8(vec.cast("array<double>"))
 
-  /** Embedding near-duplicate pairs via banded sign-LSH: candidate pairs
-    * share at least one band's full signature, then exact cosine verifies.
-    * (id_a, id_b, sim) with id_a < id_b, round(sim,4) >= threshold.
-    *
-    * Scale shape (the 100 TB path, vs [[cosineAllPairs]]'s O(n²) verify
-    * tier): the shuffle joins a NARROW (id, band, bucket) table against
-    * itself on the (band, bucket) composite key — vectors never ride the
-    * candidate-generation shuffle; they come back in two equality joins only
-    * for the surviving deduped candidates. No stage is ever all-pairs.
-    *
-    * Recall/selectivity tuning: a pair at cosine s collides in one r-plane
-    * band with p(s)^r where p(s) = 1 - acos(s)/π, and survives b bands with
-    * 1-(1-p^r)^b. More, narrower bands → higher recall but MORE candidates:
-    * a random pair has p(0)=0.5, so selectivity is 2^-r per band — banding
-    * only prunes when the threshold is genuinely high (s ≥ ~0.9, where
-    * p ≥ 0.85 and wide bands keep true pairs while 0.5^r kills noise; e.g.
-    * 32×16 admits ~5e-4 of random pairs and ~99.8% of 0.95-pairs). Below
-    * that regime p(s)/p(0) is too close to 1 for ANY (r, b) to separate —
-    * use [[cosineAllPairs]] there; the quadratic cost is inherent, not an
-    * implementation artifact. Planes are seed-deterministic, so a given
-    * corpus+params always yields the same candidate set. */
   /** Optimal (bands, planesPerBand) for [[cosineNearDups]] at a given
     * corpus size: the smallest hash budget b·r that (a) keeps recall of
     * true threshold-pairs ≥ `targetRecall` (1-(1-p^r)^b with
@@ -553,35 +532,45 @@ object Similarity {
     candidates.minBy { case (b, r) => b.toLong * r }
   }
 
+  /** Embedding near-duplicate pairs via banded sign-LSH: candidate pairs
+    * share at least one band's full signature, then exact cosine verifies
+    * ([[Dedup.lshPairs]], the pipeline the MinHash operators share).
+    * (id_a, id_b, sim) with id_a < id_b, round(sim,4) >= threshold.
+    *
+    * Scale shape (the 100 TB path, vs [[cosineAllPairs]]'s O(n²) verify
+    * tier): the shuffle joins a NARROW (id, band, key) table against
+    * itself on the (band, key) composite key — vectors never ride the
+    * candidate-generation shuffle; they come back in two equality joins only
+    * for the surviving deduped candidates. No stage is ever all-pairs.
+    *
+    * Recall/selectivity tuning: a pair at cosine s collides in one r-plane
+    * band with p(s)^r where p(s) = 1 - acos(s)/π, and survives b bands with
+    * 1-(1-p^r)^b. More, narrower bands → higher recall but MORE candidates:
+    * a random pair has p(0)=0.5, so selectivity is 2^-r per band — banding
+    * only prunes when the threshold is genuinely high (s ≥ ~0.9, where
+    * p ≥ 0.85 and wide bands keep true pairs while 0.5^r kills noise; e.g.
+    * 32×16 admits ~5e-4 of random pairs and ~99.8% of 0.95-pairs). Below
+    * that regime p(s)/p(0) is too close to 1 for ANY (r, b) to separate —
+    * use [[cosineAllPairs]] there; the quadratic cost is inherent, not an
+    * implementation artifact. Planes are seed-deterministic, so a given
+    * corpus+params always yields the same candidate set. */
   def cosineNearDups(df: DataFrame, idCol: String, vecCol: String,
                      threshold: Double = 0.95, bands: Int = 16,
                      planesPerBand: Int = 4, seed: Long = 42L): DataFrame = {
     // Infer dim from the first row — metadata-only lookup at plan time.
     val dim = df.select(size(col(vecCol))).head().getInt(0)
+    val vd = col(vecCol).cast("array<double>")
     // Fused kernel: all bands·planesPerBand sign dots in one codegen'd loop
     // nest (same planes as hyperplanes(bands·ppb, dim, seed) — composing
     // signBucket per band would build a 512-node expression tree at
     // production plane counts and fall out of whole-stage codegen).
-    val sigs = graft.functions.ArrayKernels.signBands(
-      col(vecCol).cast("array<double>"), bands, planesPerBand, dim, seed)
-    val bandTable = df.select(col(idCol).as("id"), posexplode(sigs).as(Seq("band", "bucket")))
-    val a = bandTable.select(col("band"), col("bucket"), col("id").as("id_a"))
-    val b = bandTable.select(col("band"), col("bucket"), col("id").as("id_b"))
-    val cands = a.join(b, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-    // Verify stage: norms precomputed per row (one dot per pair, not three);
-    // sqrt(dot(v,v)) is the exact double the oracle's formulation produces.
-    val vd = col(vecCol).cast("array<double>")
-    val vecs = df.select(col(idCol).as("vid"), vd.as("vv"), sqrt(dot(vd, vd)).as("nn"))
-    cands
-      .join(vecs.select(col("vid").as("id_a"), col("vv").as("v_a"), col("nn").as("n_a")), "id_a")
-      .join(vecs.select(col("vid").as("id_b"), col("vv").as("v_b"), col("nn").as("n_b")), "id_b")
-      .withColumn("sim", round(dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")), 4))
-      .filter(col("sim") >= threshold)
-      .select("id_a", "id_b", "sim")
-      .orderBy("id_a", "id_b")
+    val keys = graft.functions.ArrayKernels.signBands(vd, bands, planesPerBand, dim, seed)
+    // Verify payload: norms precomputed per row (one dot per pair, not
+    // three); sqrt(dot(v,v)) is the exact double the oracle's formulation
+    // produces.
+    val vecs = df.select(col(idCol).as("id"), vd.as("v"), sqrt(dot(vd, vd)).as("n"))
+    Dedup.lshPairs(df, col(idCol), keys, vecs,
+      "sim", round(dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")), 4), threshold)
   }
 
   /** Lloyd's k-means over an embedding column, DataFrame-native — the

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -76,20 +77,6 @@ object EventStreams {
     dir.toString
   }
 
-  /** Staging the CALLER MAY APPEND files to (stream-closure sentinels):
-    * always a fresh PRIVATE directory — [[stageToDir]]'s pass-through would
-    * have the sentinel appended into the source table itself, silently
-    * mutating user data. A directory source's data files are hardlinked in
-    * (zero-copy on the same filesystem; per-file copy fallback), a single
-    * file goes through the copy path which is already private. The dir is
-    * wiped first so a re-run never replays a previous run's sentinel as
-    * data. */
-  private def wipeTree(f: java.io.File): Unit =
-    Option(f.listFiles()).getOrElse(Array.empty).foreach { c =>
-      if (c.isDirectory) wipeTree(c)
-      c.delete()
-    }
-
   /** Hardlink (copy fallback) every data file under `src` into `tgt`,
     * RECURSIVELY, preserving subdirectory structure — a partitioned table
     * (date=…/part-*.parquet subdirs) must stage its leaf files, not zero
@@ -153,13 +140,21 @@ object EventStreams {
     else rows.write.partitionBy(partCols: _*).mode("append").parquet(dir)
   }
 
+  /** Staging the CALLER MAY APPEND files to (stream-closure sentinels):
+    * always a fresh PRIVATE directory — [[stageToDir]]'s pass-through would
+    * have the sentinel appended into the source table itself, silently
+    * mutating user data. A directory source's data files are hardlinked in
+    * (zero-copy on the same filesystem; per-file copy fallback), a single
+    * file goes through the copy path which is already private. The dir is
+    * wiped first so a re-run never replays a previous run's sentinel as
+    * data. */
   private[streaming] def stageWritableDir(parquetPath: String, name: String): String = {
     val srcFile = new java.io.File(parquetPath)
     if (!srcFile.isDirectory) return stageToDir(parquetPath, name)
     val dir = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), s"graft_stream_src_${name}_$appSuffix")
     dir.toFile.mkdirs()
-    wipeTree(dir.toFile) // recursive: leftover partition subdirs too
+    FileUtil.fullyDeleteContents(dir.toFile) // leftover partition subdirs too
     linkTree(srcFile, dir)
     dir.toString
   }
@@ -353,7 +348,7 @@ object EventStreams {
     val isLong = schema("ts").dataType == org.apache.spark.sql.types.LongType
     val dir = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), s"graft_stream_src_${queryName}_$appSuffix")
-    dir.toFile.mkdirs(); wipeTree(dir.toFile)
+    dir.toFile.mkdirs(); FileUtil.fullyDeleteContents(dir.toFile)
     val maxTs = batchDf.agg(max("ts")).head().get(0)
     val cutoff =
       if (isLong) lit(maxTs.asInstanceOf[Long] - 30L * 86400L * 1000000000L)
@@ -366,7 +361,7 @@ object EventStreams {
       val tgt = dir.resolve(s"$name.parquet")
       java.nio.file.Files.move(part.toPath, tgt,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      wipeTree(new java.io.File(tmp)); new java.io.File(tmp).delete()
+      FileUtil.fullyDelete(new java.io.File(tmp))
       tgt.toFile
     }
     val onTime = writeOnePart(batchDf.filter(col("ts") >= cutoff), "a_ontime")
@@ -404,17 +399,12 @@ object EventStreams {
       .orderBy(keys.map(col): _*)
   }
 
-  private def rmrf(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(rmrf)
-    f.delete(): Unit
-  }
-
   /** Fresh tmpdir path for a run: wiped before use — stale streaming
     * checkpoints pin source offsets, which would make a re-run a no-op
     * against already-read input. */
   private[streaming] def freshDir(name: String): String = {
     val p = s"${sys.props("java.io.tmpdir")}/${name}_$appSuffix"
-    rmrf(new java.io.File(p))
+    FileUtil.fullyDelete(new java.io.File(p))
     p
   }
 

@@ -33,19 +33,17 @@ object StreamingNearDup {
   case class Flag(doc_id: Long, anchor_id: Long)
 
   /** Narrow (band, bucket, doc_id) hit stream — works on a batch OR
-    * streaming frame (pure per-row projection, no state). */
+    * streaming frame (pure per-row projection, no state). The buckets are
+    * the batch operator's own band column, [[Dedup.minhashBandKeys]]. */
   def bucketHits(docs: DataFrame, idCol: String, textCol: String,
                  k: Int = 3, numHashes: Int = 128, bands: Int = 32,
                  seed: Long = 42L): Dataset[Hit] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val rows = numHashes / bands
+    val sig = Dedup.minhashSignature(Dedup.shingles(col(textCol), k), numHashes, seed)
     docs
       .select(col(idCol).cast("long").as("doc_id"),
-        Dedup.minhashSignature(Dedup.shingles(col(textCol), k), numHashes, seed)
-          .as("sig"))
-      .select(col("doc_id"), posexplode(Dedup.lshBands(col("sig"), bands, rows)))
-      .toDF("doc_id", "band", "bucket")
+        posexplode(Dedup.minhashBandKeys(sig, numHashes, bands)).as(Seq("band", "bucket")))
       .select(col("band").cast("int").as("band"), col("bucket"), col("doc_id"))
       .as[Hit]
   }

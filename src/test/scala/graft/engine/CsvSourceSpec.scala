@@ -93,6 +93,19 @@ class CsvSourceSpec extends AnyFunSuite {
     assert(df.collect()(0).getString(1) == "2")
   }
 
+  test("a quoted header or first-record field holding the delimiter stays one column") {
+    // the header Sinks.exportCsv writes for a column name with a comma
+    val hdr = tmpCsv("quoted.csv", "\"name, city\",age", "\"Ann, Leeds\",30")
+    val df = CsvSource.readWithHeader(spark, hdr)
+    assert(df.columns.toSeq == Seq("name, city", "age"))
+    assert(df.collect().map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("Ann, Leeds", "30")))
+    val raw = tmpCsv("quoted.txt", "\"Ann; Leeds\";30", "\"Bob; York\";41")
+    val hl = CsvSource.readHeaderless(spark, raw, delimiter = ";")
+    assert(hl.columns.toSeq == Seq("column_1", "column_2"))
+    assert(hl.orderBy("column_1").collect().map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("Ann; Leeds", "30"), ("Bob; York", "41")))
+  }
+
   private def tmpBytes(name: String, bytes: Array[Byte]): String = {
     val f = new java.io.File(Files.createTempDirectory("graft_csv").toFile, name)
     Files.write(f.toPath, bytes)

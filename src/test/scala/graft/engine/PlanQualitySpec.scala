@@ -196,17 +196,28 @@ class PlanQualitySpec extends AnyFunSuite {
     // (band, signature-slice) over a NARROW (id, band, key) frame — the
     // shingle arrays come back only for the surviving candidates' exact-
     // Jaccard verify. A text column or `sh` array inside the candidate
-    // exchange would ship the corpus through the quadratic stage.
-    import graft.llm.Dedup
-    val pairs = Dedup.minhashNearDupsPortable(
-      cat.documents, "doc_id", "text", threshold = 0.2)
-    val plan = executed(pairs)
-    val candidateJoin = plan.linesIterator
-      .filter(l => l.contains("Join") && l.contains("band"))
-      .mkString("\n")
-    assert(candidateJoin.nonEmpty, s"no band-keyed candidate join found:\n$plan")
-    assert(!candidateJoin.contains("text") && !candidateJoin.contains("sh#"),
-      s"corpus payload rides the candidate join:\n$candidateJoin")
+    // exchange would ship the corpus through the quadratic stage. The
+    // xxhash MinHash and the cosine operator share that candidate stage;
+    // for cosine the payload is the vector column and its norm.
+    import graft.llm.{Dedup, Similarity}
+    val vecs = cat.embeddings
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+    for ((name, pairs, payload) <- Seq(
+        ("minhashNearDupsPortable", Dedup.minhashNearDupsPortable(
+          cat.documents, "doc_id", "text", threshold = 0.2), Seq("text", "sh#")),
+        ("minhashNearDups", Dedup.minhashNearDups(
+          cat.documents, "doc_id", "text", threshold = 0.2), Seq("text", "sh#")),
+        ("cosineNearDups", Similarity.cosineNearDups(vecs, "vec_id", "embedding",
+          threshold = 0.9, bands = 8, planesPerBand = 3), Seq("embedding", "v#", "n#")))) {
+      val plan = executed(pairs)
+      spark.catalog.clearCache()
+      val candidateJoin = plan.linesIterator
+        .filter(l => l.contains("Join") && l.contains("band"))
+        .mkString("\n")
+      assert(candidateJoin.nonEmpty, s"$name: no band-keyed candidate join found:\n$plan")
+      assert(!payload.exists(candidateJoin.contains),
+        s"$name: corpus payload rides the candidate join:\n$candidateJoin")
+    }
   }
 
   test("vocab truncation shuffles token counts once, with map-side combine") {

@@ -121,14 +121,14 @@ class DedupSpec extends AnyFunSuite {
     // b: tokens t1 t2 t3 t5 → trigrams {t1 t2 t3, t2 t3 t5}
     // intersection 1, union 3 → 1/3
     val pairs = Seq(("w1 w2 w3 w4", "w1 w2 w3 w5")).toDF("ta", "tb")
-    val j = pairs.select(Dedup.ngramJaccard(pairs, col("ta"), col("tb"), 3).as("j"))
+    val j = pairs.select(Dedup.ngramJaccard(col("ta"), col("tb"), 3).as("j"))
       .as[Double].head()
     assert(j == 0.3333)
   }
 
   test("ngramJaccard: identical → 1.0, disjoint → 0.0") {
     val pairs = Seq((base, base), (base, distinct1)).toDF("ta", "tb")
-    val js = pairs.select(Dedup.ngramJaccard(pairs, col("ta"), col("tb")).as("j"))
+    val js = pairs.select(Dedup.ngramJaccard(col("ta"), col("tb")).as("j"))
       .as[Double].collect().toSeq
     assert(js == Seq(1.0, 0.0))
   }
@@ -141,9 +141,9 @@ class DedupSpec extends AnyFunSuite {
     val host = s"intro words then $quoted and a long tail of unrelated filler tokens here"
     val pairs = Seq((quoted, host)).toDF("ta", "tb")
     val r = pairs.select(
-        Dedup.ngramContainment(pairs, col("ta"), col("tb")).as("ab"),
-        Dedup.ngramContainment(pairs, col("tb"), col("ta")).as("ba"),
-        Dedup.ngramJaccard(pairs, col("ta"), col("tb")).as("j"))
+        Dedup.ngramContainment(col("ta"), col("tb")).as("ab"),
+        Dedup.ngramContainment(col("tb"), col("ta")).as("ba"),
+        Dedup.ngramJaccard(col("ta"), col("tb")).as("j"))
       .as[(Double, Double, Double)].head()
     assert(r._1 == 1.0, s"contained side should be 1.0: $r")
     assert(r._2 < 0.25 && r._3 < 0.25, s"host side / jaccard should dilute: $r")
