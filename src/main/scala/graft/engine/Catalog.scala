@@ -5,9 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.util.Try
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.StructType
 
 /** Spark-native analog of the reference's catalog surface: `SHOW TABLES`
   * (reference/server/server.js:139-144) and `DESCRIBE TABLE`
@@ -20,16 +19,20 @@ import org.apache.spark.sql.types.StructType
   * path, `file:`, HDFS, S3). Reads are lazy DataFrames, so Catalyst column
   * pruning / predicate pushdown reach the parquet scan untouched.
   *
-  * Schema reuse, one listing per read. Inference costs one Spark job per
-  * read, so each instance remembers every table's raw inferred schema with
-  * the table's [[ParquetFooters.snapshot]] and the session confs that change
-  * inference ([[inferenceConfs]]). [[table]] reads a remembered table with
-  * that schema (one listing, no job) and keeps the frame while its snapshot
-  * and the confs equal the remembered ones; otherwise it infers again and
-  * remembers the new schema, so a table rewritten in place (an ingest,
-  * `mode("overwrite")`, [[bootstrapSampleData]]) never serves a stale
-  * schema. Missing tables and partitioned layouts are never remembered: they
-  * keep Spark's own errors and partition discovery. Safe to share between
+  * Relation reuse, one listing per read. Inference costs one Spark job per
+  * read and resolving a relation several milliseconds, so each instance
+  * remembers every table's raw `LogicalRelation` with the session confs
+  * that change inference ([[inferenceConfs]]). [[table]] lists the table
+  * path once through the Hadoop FS API, skipping what Spark's own listing
+  * skips; while that listing equals the relation's
+  * [[ParquetFooters.snapshot]] (path, length and mtime of each file) and the
+  * confs equal the remembered ones, it returns the remembered relation with
+  * fresh attribute ids (no job, no file opened). Any difference, a
+  * subdirectory or a listing error reads the table again and remembers the
+  * new relation, so a table rewritten in place (an ingest,
+  * `mode("overwrite")`, [[bootstrapSampleData]]) is never served stale.
+  * Missing tables and partitioned layouts are never remembered: they keep
+  * Spark's own errors and partition discovery. Safe to share between
   * threads.
   *
   * The session's conf is never written. Parquet reads
@@ -40,24 +43,37 @@ import org.apache.spark.sql.types.StructType
   */
 final class Catalog(val spark: SparkSession, val dir: String) {
 
-  /** Table name → ((snapshot, inference confs) it was read under, raw schema). */
-  private val schemas = new ConcurrentHashMap[String, ((Seq[(String, Long, Long)], Seq[Option[String]]), StructType)]()
+  /** Table name → (inference confs it was read under, raw relation). */
+  private val relations = new ConcurrentHashMap[String, (Seq[Option[String]], LogicalRelation)]()
 
   /** Full-table scan (reference S6, `SELECT * FROM t`, server.js:400-404). */
   def table(name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val confs = Catalog.inferenceConfs.map(spark.conf.getOption)
-    def seen(df: DataFrame) = (ParquetFooters.snapshot(df.queryExecution.analyzed), confs)
-    val raw = Option(schemas.get(name))
-      .collect { case (at @ (_, `confs`), schema) => at -> spark.read.schema(schema).parquet(path) }
-      .collect { case (at, df) if seen(df) == at => df }
+    val raw = Option(relations.get(name))
+      .collect { case (`confs`, leaf) if listing(path).contains(ParquetFooters.snapshot(leaf)) =>
+        GraftSqlBridge.ofRows(spark, leaf.newInstance())
+      }
       .getOrElse {
         val df = spark.read.parquet(path)
-        if (Catalog.partitioned(df)) schemas.remove(name) else schemas.put(name, seen(df) -> df.schema)
+        df.queryExecution.analyzed match {
+          case leaf @ LogicalRelation(rel: HadoopFsRelation, _, _, _, _) if rel.partitionSchema.isEmpty =>
+            relations.put(name, confs -> leaf)
+          case _ => relations.remove(name)
+        }
         df
       }
     TsNorm.normalizeTs(raw)
   }
+
+  /** The files at `path`, as [[ParquetFooters.snapshot]] gives them, from
+    * one listing; None for a subdirectory or a listing error. */
+  private def listing(path: String): Option[Seq[(String, Long, Long)]] = Try {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(fs.makeQualified(p)).toSeq.filterNot(f => GraftSqlBridge.hiddenPathName(f.getPath.getName))
+  }.toOption.filterNot(_.exists(_.isDirectory))
+    .map(_.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sortBy(_._1))
 
   /** SHOW TABLES (reference S8), listed through the same Hadoop FS API the
     * reads use. */
@@ -125,8 +141,4 @@ object Catalog {
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.parquet.mergeSchema",
     "spark.sql.caseSensitive")
-
-  /** Whether a relation of `df` has partition columns. */
-  private def partitioned(df: DataFrame): Boolean = df.queryExecution.analyzed
-    .collectFirst { case LogicalRelation(rel: HadoopFsRelation, _, _, _, _) => rel.partitionSchema.nonEmpty }.contains(true)
 }

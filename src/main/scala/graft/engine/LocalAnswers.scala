@@ -13,9 +13,14 @@ import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
   * (`graft.llm.Similarity.ivfTopK`). Everything larger takes the job path.
   *
   * Driver memory this holds: at most `SessionMemo.MaxEntries` × [[MaxBytes]]
-  * for the IVF indexes the fit memo keeps, plus one located run of at most
-  * [[MaxBytes]] per page being served, plus the remembered footers of at
-  * most `SessionMemo.MaxEntries` × [[ParquetFooters.MaxFiles]] files. */
+  * for the IVF indexes the fit memo keeps; per page being served, its rows,
+  * or a located run of at most [[MaxBytes]] when the run's rows are out of
+  * key order; the remembered footers of at most `SessionMemo.MaxEntries` ×
+  * [[ParquetFooters.MaxFiles]] files; at most `SessionMemo.MaxEntries`
+  * Parquet readers, each holding one broadcast of the session's Hadoop conf;
+  * at most `SessionMemo.MaxEntries` observed scan counts ([[ScanCounts]]), a
+  * name and a number each; and one raw relation, with its file listing, per
+  * table a [[Catalog]] has read. */
 private[graft] object LocalAnswers {
 
   /** The most bytes one request reads onto the driver: a located run's

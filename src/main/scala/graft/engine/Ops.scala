@@ -36,6 +36,10 @@ object Ops {
     * sorts the whole frame, and there an offset past `Int.MaxValue` rows is
     * rejected with an `IllegalArgumentException`. Every path gives the same
     * rows.
+    *
+    * When that full sort reads a plain file scan (a CSV upload, say), the
+    * first page of the frame also counts the scan's rows ([[ScanCounts]]),
+    * for [[countTotal]] to answer from.
     */
   val DefaultPageSize = 100 // server.js:53
   val MaxPageSize     = 1000 // server.js:54
@@ -47,7 +51,7 @@ object Ops {
     ParquetFooters.page(df, orderBy, offset, size).getOrElse {
       require(offset <= Int.MaxValue,
         s"page $pageNum of size $size starts at row $offset, past the ${Int.MaxValue} rows an offset can skip")
-      df.orderBy(orderBy: _*).offset(offset.toInt).limit(size)
+      ScanCounts.observed(df).orderBy(orderBy: _*).offset(offset.toInt).limit(size)
     }
   }
 
@@ -55,13 +59,14 @@ object Ops {
     * with one non-null `total: bigint` column.
     *
     * On a plain Parquet scan ([[ParquetFooters]]) the total is the sum of
-    * the footers' row-group row counts, read when this is called, and the
-    * frame is local ([[LocalAnswers]]): collecting it runs no Spark job.
-    * Every other frame (filtered, joined, CSV, partitioned, or more than
-    * [[ParquetFooters.MaxFiles]] files) counts in one Spark job when
-    * collected. */
+    * the footers' row-group row counts, read when this is called. On a file
+    * frame that a [[page]] has sorted whole, the total is the count that
+    * page took ([[ScanCounts]]). Either frame is local ([[LocalAnswers]]):
+    * collecting it runs no Spark job. Every other frame (filtered, joined,
+    * more than [[ParquetFooters.MaxFiles]] files, or a file frame not yet
+    * paged) counts in one Spark job when collected. */
   def countTotal(df: DataFrame): DataFrame =
-    ParquetFooters.rowCount(df) match {
+    ParquetFooters.rowCount(df).orElse(ScanCounts.total(df)) match {
       case Some(n) =>
         LocalAnswers.frame(df.sparkSession,
           Seq(AttributeReference("total", LongType, nullable = false)()), Seq(InternalRow(n)))

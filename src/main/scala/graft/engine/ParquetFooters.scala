@@ -12,8 +12,8 @@ import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotatio
 import org.apache.parquet.schema.PrimitiveType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, sources}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, AttributeSet, Descending, Literal, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort, SubqueryAlias}
 import org.apache.spark.sql.catalyst.types.{DataTypeUtils, PhysicalDataType}
@@ -37,9 +37,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * A located page whose run of row groups holds at most
   * [[LocalAnswers.MaxBytes]] uncompressed bytes is read on the driver, from
-  * only the files that hold the run, and comes back as a local frame: no
-  * Spark job. A larger run is read by one Spark job that skips every other
-  * row group.
+  * only the row groups of the run, by one reader per relation and session
+  * conf, and comes back as a local frame: no Spark job. A larger run is read
+  * by one Spark job that skips every other row group.
   */
 object ParquetFooters {
 
@@ -63,10 +63,9 @@ object ParquetFooters {
     * over that run plus the skip inside the run gives exactly the page the
     * full sort gives.
     *
-    * When the run fits [[LocalAnswers.MaxBytes]] ([[onDriver]]), the files
-    * that hold it are read on the driver through the relation's own reader,
-    * with the key-range filters; the rows in range are sorted by the key,
-    * skipped and cut to `size`, and stand in for the relation under the
+    * When the run fits [[LocalAnswers.MaxBytes]] ([[onDriver]]), its row
+    * groups are read on the driver through the relation's own reader
+    * ([[readRun]]); the page's rows stand in for the relation under the
     * frame's own projections in a local frame. A page past the last row is
     * an empty local frame. A larger run, or a relation whose output is not
     * its data columns, is the filtered frame sorted, skipped and limited by
@@ -105,37 +104,51 @@ object ParquetFooters {
   private val GregorianCutoverDay = java.time.LocalDate.of(1582, 10, 15).toEpochDay.toInt
 
   /** One row group's row count, key range (as Catalyst values),
-    * uncompressed bytes, and file. */
-  private[engine] final case class Group(rows: Long, min: Any, max: Any, bytes: Long, file: FileStatus)
+    * uncompressed bytes and file, and its byte range `[start, start +
+    * length)` in the file: the footer's starting position and compressed
+    * size. */
+  private[engine] final case class Group(rows: Long, min: Any, max: Any, bytes: Long, file: FileStatus,
+                                         start: Long = 0L, length: Long = 0L)
 
-  /** The consecutive groups that hold a page: their key range `[lo, hi]`,
-    * the rows to skip inside it, their bytes and their files. */
-  private[engine] final case class Run(lo: Any, hi: Any, skip: Int, bytes: Long, files: Seq[FileStatus])
+  /** The consecutive groups that hold a page, in page order: their key range
+    * `[lo, hi]` and the rows to skip inside it. */
+  private[engine] final case class Run(lo: Any, hi: Any, skip: Int, groups: Seq[Group]) {
+    def bytes: Long = groups.map(_.bytes).sum
+    def rows: Long = groups.map(_.rows).sum
+    def files: Seq[FileStatus] = groups.map(_.file).distinct
+  }
 
   /** Whether a located run is read on the driver rather than by a job. */
   private[engine] def onDriver(run: Run): Boolean = run.bytes <= LocalAnswers.MaxBytes
 
-  /** A plain Parquet scan: its relation leaf, the relation, and the relation
+  /** A plain file scan: its relation leaf, the relation, and the relation
     * columns its projections pass through unchanged. */
-  private final case class Scan(leaf: LogicalRelation, rel: HadoopFsRelation, passed: AttributeSet) {
+  private[engine] final case class Scan(leaf: LogicalRelation, rel: HadoopFsRelation, passed: AttributeSet) {
     /** The leaf outputs exactly the data columns (no metadata columns), the
       * rows the relation's reader returns. */
     def readsData: Boolean = leaf.output.map(_.name) == rel.dataSchema.fieldNames.toSeq
   }
 
-  /** The plain Parquet scan under `plan`. Reads the analyzed plan, whose
-    * aliases and projections the optimizer would only collapse, so a frame
-    * that falls back pays no extra optimizer pass. */
-  private def plainScan(plan: LogicalPlan): Option[Scan] = plan match {
-    case SubqueryAlias(_, child) => plainScan(child)
+  /** The plain file scan under `plan`: nothing but `Project`s (and aliases)
+    * over one non-bucketed batch `HadoopFsRelation`, so every row the scan
+    * reads reaches the top once and no shuffle sits under it. Reads the
+    * analyzed plan, whose aliases and projections the optimizer would only
+    * collapse, so a frame that falls back pays no extra optimizer pass. */
+  private[engine] def fileScan(plan: LogicalPlan): Option[Scan] = plan match {
+    case SubqueryAlias(_, child) => fileScan(child)
     case Project(list, child) =>
-      plainScan(child).map(scan => scan.copy(passed =
+      fileScan(child).map(scan => scan.copy(passed =
         AttributeSet(list.collect { case a: AttributeReference if scan.passed.contains(a) => a })))
-    case leaf @ LogicalRelation(rel: HadoopFsRelation, output, _, false, _)
-        if rel.fileFormat.isInstanceOf[ParquetFileFormat] && rel.partitionSchema.isEmpty &&
-          rel.bucketSpec.isEmpty && rel.location.isInstanceOf[PartitioningAwareFileIndex] =>
+    case leaf @ LogicalRelation(rel: HadoopFsRelation, output, _, false, _) if rel.bucketSpec.isEmpty =>
       Some(Scan(leaf, rel, AttributeSet(output)))
     case _ => None
+  }
+
+  /** The plain Parquet scan under `plan`: a [[fileScan]] of a
+    * non-partitioned Parquet relation over a listed file index. */
+  private def plainScan(plan: LogicalPlan): Option[Scan] = fileScan(plan).filter { scan =>
+    scan.rel.fileFormat.isInstanceOf[ParquetFileFormat] && scan.rel.partitionSchema.isEmpty &&
+      scan.rel.location.isInstanceOf[PartitioningAwareFileIndex]
   }
 
   /** A frame's table snapshot, the one table identity of [[Catalog.table]],
@@ -190,7 +203,8 @@ object ParquetFooters {
           // Spark may rebase older dates between calendars on read, which the
           // stored statistics do not show.
           if key.dataType != DateType || min.asInstanceOf[Int] >= GregorianCutoverDay
-        } yield Group(block.getRowCount, min, decode(stats.genericGetMax), block.getTotalByteSize, file)
+        } yield Group(block.getRowCount, min, decode(stats.genericGetMax), block.getTotalByteSize, file,
+          block.getStartingPos, block.getCompressedSize)
       }.toSeq
     if (groups.forall(_.isDefined)) Some(groups.flatten) else None
   }
@@ -240,16 +254,29 @@ object ParquetFooters {
         val run = inOrder.slice(first, last + 1)
         val skip = offset - starts(first)
         if (skip > Int.MaxValue) None
-        else Some(Some(Run(run.map(_.min).min(ord), run.map(_.max).max(ord), skip.toInt,
-          run.map(_.bytes).sum, run.map(_.file).distinct)))
+        else Some(Some(Run(run.map(_.min).min(ord), run.map(_.max).max(ord), skip.toInt, run)))
       }
     }
   }
 
-  /** The page's rows, read on the driver from the files that hold `run`
-    * through the relation's own reader. The key-range filters let the reader
-    * skip the files' other row groups; the rows kept are those in
-    * `[run.lo, run.hi]`, the rows of the run. */
+  /** Readers by (session, relation data schema, output schema, relation
+    * options, session conf): building one broadcasts the session's whole
+    * Hadoop conf, so a table's pages share one. A conf change builds a new
+    * reader. Releases nothing: Spark's `ContextCleaner` frees the broadcast
+    * once an evicted reader is collected. */
+  private val readers = new graft.llm.SessionMemo[PartitionedFile => Iterator[InternalRow]](_ => ())
+
+  /** The page's rows, read on the driver from the row groups of `run` alone,
+    * in ascending key order, through the relation's own reader.
+    *
+    * Each group is given to the reader as its byte range (adjacent groups of
+    * one file as one range); Parquet reads exactly the row groups whose
+    * midpoint lies in a range. When every key read lies in `[run.lo,
+    * run.hi]` and is at least the one before it (strictly greater, for a
+    * descending page), and the reader returns the footers' row count, the
+    * rows are in page order already and only the page's ranks are copied.
+    * Otherwise every row in `[run.lo, run.hi]` is copied, sorted by the key
+    * (equal keys keep read order) and cut to the page. */
   private def readRun(scan: Scan, key: AttributeReference, descending: Boolean,
                       run: Run, size: Int): Seq[InternalRow] = {
     val rel = scan.rel
@@ -258,20 +285,38 @@ object ParquetFooters {
     val at = scan.leaf.output.indexWhere(_.exprId == key.exprId)
     val dt = key.dataType
     val ord = PhysicalDataType.ordering(dt)
-    def bound(v: Any): Any = CatalystTypeConverters.convertToScala(v, dt)
-    val read = rel.fileFormat.buildReaderWithPartitionValues(spark, rel.dataSchema, new StructType(), schema,
-      Seq(sources.GreaterThanOrEqual(key.name, bound(run.lo)), sources.LessThanOrEqual(key.name, bound(run.hi))),
-      rel.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      spark.sessionState.newHadoopConfWithOptions(rel.options))
-    val toUnsafe = UnsafeProjection.create(schema)
-    val rows = run.files.flatMap { f =>
-      read(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(f), 0, f.getLen, Array.empty,
-          f.getModificationTime, f.getLen))
-        .map(toUnsafe)
-        .filter { r => val k = r.get(at, dt); ord.gteq(k, run.lo) && ord.lteq(k, run.hi) }
-        .map(_.copy())
+    val read = readers.getOrBuild(spark, rel.dataSchema, schema, rel.options, spark.conf.getAll) {
+      rel.fileFormat.buildReaderWithPartitionValues(spark, rel.dataSchema, new StructType(), schema, Nil,
+        rel.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConfWithOptions(rel.options))
     }
-    rows.sorted(Ordering.by[InternalRow, Any](_.get(at, dt))(if (descending) ord.reverse else ord))
+    val toUnsafe = UnsafeProjection.create(schema)
+    val ranges = (if (descending) run.groups.reverse else run.groups).foldLeft(List.empty[Group]) {
+      case (last :: done, g) if g.file == last.file && g.start == last.start + last.length =>
+        last.copy(length = last.length + g.length) :: done
+      case (done, g) => g :: done
+    }.reverse
+    def rows = ranges.iterator.flatMap(g => read(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(g.file),
+      g.start, g.length, Array.empty, g.file.getModificationTime, g.file.getLen)))
+    def inRun(k: Any) = k != null && ord.gteq(k, run.lo) && ord.lteq(k, run.hi)
+
+    // The page's ranks among the run's rows in ascending order.
+    val (from, until) =
+      if (descending) (run.rows - run.skip - size, run.rows - run.skip) else (run.skip.toLong, run.skip.toLong + size)
+    val page = Seq.newBuilder[InternalRow]
+    var (n, ordered, prev) = (0L, true, null: Any)
+    rows.foreach { r =>
+      if (ordered) {
+        val k = r.get(at, dt)
+        ordered = inRun(k) && (n == 0 || { val cmp = ord.compare(k, prev); cmp > 0 || cmp == 0 && !descending })
+        if (n >= from && n < until) page += toUnsafe(r).copy()
+        prev = InternalRow.copyValue(k)
+      }
+      n += 1
+    }
+    if (ordered && n == run.rows) if (descending) page.result().reverse else page.result()
+    else rows.filter(r => inRun(r.get(at, dt))).map(toUnsafe(_).copy()).toSeq
+      .sorted(Ordering.by[InternalRow, Any](_.get(at, dt))(if (descending) ord.reverse else ord))
       .slice(run.skip, run.skip + size)
   }
 

@@ -60,6 +60,12 @@ private[graft] final class SessionMemo[V](release: V => Unit) {
     }
   }
 
+  /** The entry of `df` and `params`, when the memo holds one. */
+  def get(df: DataFrame, params: Any*): Option[V] = {
+    purgeStopped()
+    Option(entries.get(key(df, params)))
+  }
+
   /** The `refit` hook: drop the entry and release it. */
   def invalidate(df: DataFrame, params: Any*): Unit =
     Option(entries.remove(key(df, params))).foreach(release)

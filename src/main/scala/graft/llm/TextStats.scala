@@ -141,28 +141,31 @@ object TextStats {
     * (tok[i] == tok[i−1]), and for 2-/3-token grams the count of gram
     * POSITIONS whose gram repeats within the doc (total − singleton runs
     * in the SORTED gram array — any total order groups equals adjacently,
-    * so engine collation differences cannot move the counts). Index
-    * arithmetic is clamped (greatest/least) with the boundary arms
-    * short-circuiting the self-compares: Spark's element_at throws on 0
-    * where DuckDB's list index returns NULL, and the clamped form is the
-    * one that can't drift between them. */
+    * so engine collation differences cannot move the counts). Every array
+    * is built once per row and read in one pass (`zip_with`, `aggregate`):
+    * a lambda that indexed into an array recomputed it per element. */
   def repetitionSignals(text: Column): Column = {
     val toks = tokens(text)
+    // The n shifted token slices zipped into grams: no lambda reads `toks`,
+    // so each row splits its text a fixed number of times.
     def grams(n: Int) = when(size(toks) < n, array(concat_ws(" ", toks)))
-      .otherwise(transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
+      .otherwise((1 until n).foldLeft(slice(toks, lit(1), size(toks) - n + 1)) { (g, k) =>
+        zip_with(g, slice(toks, lit(k + 1), size(toks) - n + 1), (a, b) => concat_ws(" ", a, b))
+      })
+    // One pass over the sorted grams, carrying the previous gram, the length
+    // of its run and the positions in finished runs longer than one.
     def dupPos(g: Column) = {
-      val srt = array_sort(g)
-      val sz = size(srt)
-      sz - size(filter(sequence(lit(1), sz), i =>
-        (i === 1 || element_at(srt, greatest(i - 1, lit(1))) =!=
-          element_at(srt, i)) &&
-        (i === sz || element_at(srt, least(i + 1, sz)) =!=
-          element_at(srt, i))))
+      def closed(acc: Column) = acc("dups") + when(acc("run") > 1, acc("run")).otherwise(0)
+      aggregate(array_sort(g),
+        struct(lit(null).cast("string").as("prev"), lit(0).as("run"), lit(0).as("dups")),
+        (acc, x) => when(acc("run") > 0 && acc("prev") === x,
+            struct(acc("prev").as("prev"), (acc("run") + 1).as("run"), acc("dups").as("dups")))
+          .otherwise(struct(x.as("prev"), lit(1).as("run"), closed(acc).as("dups"))),
+        closed)
     }
-    val rep = size(filter(sequence(lit(1), size(toks)), i =>
-      i =!= 1 && element_at(toks, greatest(i - 1, lit(1))) ===
-        element_at(toks, i)))
+    val rep = aggregate(toks, struct(lit(null).cast("string").as("prev"), lit(0).as("n")),
+      (acc, x) => struct(x.as("prev"), (acc("n") + when(acc("prev") === x, 1).otherwise(0)).as("n")),
+      _("n"))
     struct(
       size(toks).cast("bigint").as("n_tok"),
       rep.cast("bigint").as("n_rep"),

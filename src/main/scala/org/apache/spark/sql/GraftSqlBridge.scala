@@ -31,6 +31,12 @@ object GraftSqlBridge {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 
+  /** Whether a file listing skips a file or directory of this name: Spark's
+    * own hidden-file rule (`_`/`.` prefixes, in-flight copies), which
+    * `HadoopFSUtils` keeps private[spark]. */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** Unload every registered state-store provider (private[sql]). One-shot
     * streaming drains never reuse their stores, but loaded providers keep
     * being snapshotted by the maintenance thread — a suite of drains

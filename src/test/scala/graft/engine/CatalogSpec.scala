@@ -136,4 +136,37 @@ class CatalogSpec extends AnyFunSuite {
     assert(df.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
       Seq(1L -> "a", 2L -> "b"))
   }
+
+  test("two lookups of one remembered table join by column references with fresh attribute ids") {
+    val dir = Files.createTempDirectory("graft_cat_selfjoin").toString
+    spark.range(0, 100).select($"id".as("customer_id"), ($"id" % 10).as("region_id")).write.parquet(s"$dir/t.parquet")
+    val plain = spark.read.parquet(s"$dir/t.parquet")
+    val plainRows = plain.as("a").join(plain.as("b"), $"a.customer_id" === $"b.region_id").count()
+    val c = new Catalog(spark, dir)
+    c.table("t")
+    val (a, b) = (c.table("t"), c.table("t"))
+    assert(a.join(b, a("customer_id") === b("region_id")).count() == plainRows && plainRows == 100)
+  }
+
+  test("a table rewritten in place between two lookups is read fresh") {
+    val dir = Files.createTempDirectory("graft_cat_fresh").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$dir/t.parquet")
+    val c = new Catalog(spark, dir)
+    assert(c.table("t").orderBy("id").as[(Long, String)].collect().toSeq == Seq(1L -> "a", 2L -> "b"))
+    Seq((3L, "c")).toDF("id", "v").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    assert(c.table("t").as[(Long, String)].collect().toSeq == Seq(3L -> "c"))
+    assert(Ops.countTotal(c.table("t")).head().getLong(0) == 1)
+  }
+
+  test("a remembered table is served from one listing, opening no file") {
+    val dir = Files.createTempDirectory("graft_cat_hit").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").repartition(2).write.parquet(s"$dir/t.parquet")
+    val c = new Catalog(spark, CountingFs.uri(spark, dir))
+    c.table("t")
+    val path = s"$dir/t.parquet"
+    val (((df, jobs), listings), opened) =
+      CountingFs.during("open", path)(CountingFs.during("list", path)(jobsLaunchedBy(c.table("t"))))
+    assert(listings == 1 && opened == 0 && jobs == 0)
+    assert(df.orderBy("id").as[(Long, String)].collect().toSeq == Seq(1L -> "a", 2L -> "b"))
+  }
 }

@@ -52,6 +52,45 @@ object OpsProps extends Properties("graft.engine") {
           (!sorted || nulls || ParquetFooters.page(df, order, 0, size).isDefined) && locatedJobs == 0
     }
 
+  property("located pages over row groups in or out of key order equal the plain page, with 0 jobs") =
+    Prop.forAll(Gen.chooseNum(1, 150), Gen.chooseNum(1, 4), Gen.oneOf(true, false), Gen.oneOf(true, false),
+      Gen.chooseNum(7, 60)) { (n: Int, files: Int, shuffled: Boolean, desc: Boolean, size: Int) =>
+      // Key-disjoint files; sorted files hold several row groups each, and a
+      // shuffled file one group whose rows are out of key order.
+      val rows = (0 until n).map(i => (i.toLong, s"v$i")).toDF("k", "v").repartitionByRange(files, col("k"))
+      val path = java.nio.file.Files.createTempDirectory("graft_prop_groups").toString + "/t.parquet"
+      (if (shuffled) rows.sortWithinPartitions(rand()) else rows.sortWithinPartitions("k"))
+        .write.option("parquet.block.size", if (shuffled) 1 << 20 else 256)
+        .option("parquet.block.size.row.check.min", 5)
+        .option("parquet.block.size.row.check.max", 5).parquet(path)
+      val df = spark.read.parquet(path)
+      val order = Seq(if (desc) col("k").desc else col("k"))
+      val pages = 1 to n / size + 1
+      val located = pages.forall(p => ParquetFooters.page(df, order, (p - 1) * size, size).isDefined)
+      val (got, jobs) = TestSpark.jobsLaunchedBy(pages.map(p => Ops.page(df, order, p, size).collect().toSeq))
+      located && jobs == 0 &&
+        got == pages.map(p => df.orderBy(order: _*).offset((p - 1) * size).limit(size).collect().toSeq)
+    }
+
+  property("a file page's observed total equals count(), also after the file is restaged") =
+    Prop.forAll(Gen.chooseNum(0, 80), Gen.chooseNum(1, 40), Gen.chooseNum(1, 4)) {
+      (n: Int, more: Int, pageNum: Int) =>
+        val dir = java.nio.file.Files.createTempDirectory("graft_prop_observed")
+        val source = dir.resolve("upload.csv")
+        def stage(rows: Int) = {
+          java.nio.file.Files.writeString(source, (Seq("id,v") ++ (0 until rows).map(i => f"$i%04d,r$i")).mkString("\n"))
+          CsvSource.read(spark, CsvSource.stageUpload(spark, source.toString, dir.resolve("staged").toString))
+        }
+        def counted(rows: Int) = {
+          val df = stage(rows)
+          val unpaged = Ops.countTotal(df).head().getLong(0) // no page yet: counted by a job
+          Ops.page(df, Seq(col("id")), pageNum, 10).collect()
+          val (total, jobs) = TestSpark.jobsLaunchedBy(Ops.countTotal(df).head().getLong(0))
+          unpaged == rows && total == df.count() && total == rows && jobs == 0
+        }
+        counted(n) && counted(n + more)
+    }
+
   property("dedupKeepFirst: output keys unique, idempotent, subset of input") =
     Prop.forAll(Gen.listOfN(40, Gen.chooseNum(0, 9)), Gen.chooseNum(0L, 100L)) {
       (keys: List[Int], salt: Long) =>

@@ -53,6 +53,17 @@ class OpsSpec extends AnyFunSuite {
     assert(Ops.countTotal(nums).columns.toSeq == Seq("total"))
   }
 
+  test("countTotal after a failed file page counts by job, not from the page's partial count") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ops_failed").toString
+    nums.select($"id".cast("string").as("id"), $"name").coalesce(1).write.option("header", "true").csv(s"$dir/t")
+    val boom = udf((id: String) => if (id == "40") throw new IllegalStateException("bad row") else id)
+    // A failing projection over a plain file scan; count(1) prunes it away.
+    val df = CsvSource.read(spark, s"$dir/t").withColumn("checked", boom($"id"))
+    intercept[Exception](Ops.page(df, Seq(col("id")), 1, 10).collect())
+    val (total, jobs) = TestSpark.jobsLaunchedBy(Ops.countTotal(df).head().getLong(0))
+    assert(total == 57 && jobs >= 1)
+  }
+
   test("joinChain left-folds inner joins; joinChainSql accepts raw ON strings") {
     val a = Seq((1, "a1"), (2, "a2"), (3, "a3")).toDF("k", "av")
     val b = Seq((1, "b1"), (2, "b2")).toDF("kb", "bv")

@@ -175,4 +175,26 @@ class ParquetFootersSpec extends AnyFunSuite {
       .select(date_add(lit("1500-01-01").cast("date"), col("id").cast("int")).as("d")))
     assertSameAsScan(ancient, Seq(col("d")), 30, footers = false)
   }
+
+  test("pages of an unchanged table share one reader; a conf change builds a new one") {
+    val session = spark.newSession()
+    val dir = Files.createTempDirectory("graft_footers_reader").toString
+    keyed(1000, 4).write.parquet(s"$dir/t.parquet")
+    val df = new Catalog(session, dir).table("t")
+    val sc = spark.sparkContext
+    /** Broadcasts made while `f` runs, between two marker broadcasts. */
+    def broadcasts(f: => Unit): Long = {
+      val before = sc.broadcast(0)
+      f
+      val after = sc.broadcast(0)
+      Seq(before, after).foreach(_.destroy())
+      after.id - before.id - 1
+    }
+    def page(p: Int) = Ops.page(df, Seq(col("id")), p, 100).collect().toSeq.map(_.getLong(0))
+    assert(page(1) == (0L until 100L))
+    assert(broadcasts(assert(page(3) == (200L until 300L))) == 0)
+    session.conf.set("spark.graft.probe", "reader")
+    assert(broadcasts(assert(page(4) == (300L until 400L))) >= 1)
+    assert(broadcasts(assert(page(5) == (400L until 500L))) == 0)
+  }
 }
